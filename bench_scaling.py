@@ -75,28 +75,11 @@ if mode == "entropy":
                F.avg("entropy6").alias("avg_entropy"),
                F.avg("ctw").alias("avg_ctw"))
     )
-elif mode == "stats_arrow":
-    # Arrow-kernel stats path (the pre-r4 'stats' mode), kept for the
-    # ledger comparison: bincount kernel, fields= projection pushdown so
-    # only the 3 consumed scalars cross Arrow IPC
+else:
+    # stats mode: the Arrow window kernel with fields= projection pushdown,
+    # so only the 3 consumed scalars cross Arrow IPC back from Python
     ws = window_stats(pages, window=1000, id_cols=["host", "warc_ts"], f32=False,
                       fields=["win_len", "cnt_g", "cnt_c"])
-    agg = (
-        ws.withWatermark("warc_ts", "10 minutes")
-          .groupBy(F.window("warc_ts", "10 minutes").alias("w"), "host")
-          .agg(F.count("*").alias("n_windows"),
-               F.sum("win_len").alias("total_chars"),
-               F.sum("cnt_g").alias("cnt_g"), F.sum("cnt_c").alias("cnt_c"))
-    )
-else:
-    # stats mode, JVM-expression path (r4): positional windows + counts as
-    # whole-stage-codegen column arithmetic — ZERO Arrow/Python crossing.
-    # The r3 ledger attributed the 2->8 gap to 0.39 GB of Arrow IPC into
-    # Python; this path removes that crossing entirely (differential test:
-    # tests/test_streaming.py::test_positional_window_counts_matches_arrow_kernel)
-    ws = S.positional_window_counts(pages, window=1000,
-                                    id_cols=("host", "warc_ts"),
-                                    chars=("c", "g"))
     agg = (
         ws.withWatermark("warc_ts", "10 minutes")
           .groupBy(F.window("warc_ts", "10 minutes").alias("w"), "host")
@@ -412,7 +395,7 @@ def main():
     ap.add_argument("--pages", type=int, default=4000)
     ap.add_argument("--page-bytes", type=int, default=8192)
     ap.add_argument("--mode", default="entropy",
-                    choices=["entropy", "stats", "stats_arrow"])
+                    choices=["entropy", "stats"])
     ap.add_argument("--low", type=int, default=2)
     ap.add_argument("--high", type=int, default=8)
     ap.add_argument(
@@ -500,14 +483,11 @@ def write_baseline_md():
         ("entropy", "per-page positional windows (W=1000, Arrow-vectorized)",
          "6-bin entropy + CTW depth 6 per positional window "
          "(the reference's entropy mode, entropy.rs:123-136 — CPU-bound)"),
-        ("stats", "per-page positional windows (W=1000, pure JVM expressions)",
-         "win_len + case-folded G/C counts per positional window as "
-         "whole-stage-codegen column arithmetic — ZERO Arrow/Python "
-         "crossing (r4; differential-tested against the Arrow kernel)"),
-        ("stats_arrow", "per-page positional windows (W=1000, Arrow-vectorized)",
-         "the same 3 count fields via the Arrow-batched statistics kernel "
-         "(the pre-r4 stats mode, kept for the ledger comparison — its "
-         "2.96 GB Arrow IPC crossing is what the JVM path removes)"),
+        ("stats", "per-page positional windows (W=1000, Arrow-vectorized)",
+         "win_len + case-folded G/C counts per positional window via the "
+         "Arrow-batched statistics kernel, fields= projection so only the 3 "
+         "count columns cross back (records taken before the JVM count path "
+         "was removed carry its numbers)"),
     ):
         p = os.path.join(REPO, "BENCH", f"scaling_{mode}.json")
         if not os.path.exists(p):
@@ -619,7 +599,7 @@ chars = {r["gb_text"]} GB text, 500 hosts, 5 hot) -> {mapside} computing {desc}
     sustained = ""
     for fname, map_label in (
         ("sustained_1m.json", "Arrow window kernel — the headline record"),
-        ("sustained_1m_jvm.json", "pure-JVM window counts, r4"),
+        ("sustained_1m_jvm.json", "pure-JVM window counts, r4; path since removed"),
     ):
         sp = os.path.join(REPO, "BENCH", fname)
         if not os.path.exists(sp):
@@ -690,8 +670,11 @@ understated.
   ledger showed a 2.96 GB Arrow IPC crossing into Python, the most
   DRAM-bandwidth-sensitive stream in the job). Round 4 moved the
   stats map side into pure JVM expressions (zero Python crossing,
-  ledger py_sent = 0) and the scored min-of-3 reads >= 0.8; the
-  Arrow path is retained as mode stats_arrow for the comparison.
+  ledger py_sent = 0) and the scored min-of-3 reads >= 0.8. That
+  JVM path was later removed: on a 4-vCPU host (local[3], 16,000
+  8 KB pages) the Arrow path with fields= projection ran the stats
+  job in 3.90-4.43 s against 5.51-5.97 s for the JVM path, so the
+  stats mode runs the single Arrow kernel path again.
   Ambient +-20% drift still applies to any single pair on this VM.
 - statistics kernel itself is cache-sized out of that regime: 32 KB
   doc-aligned chunks keep the ~30x-text working set in each core's

@@ -48,16 +48,8 @@ spark = get_spark(app_name="fw-sustained", master="local[32]", shuffle_partition
 listener = ProgressCollector(); spark.streams.addListener(listener)
 t0 = time.perf_counter()
 pages = S.with_host(S.read_pages_stream(spark, src))
-if {map_side!r} == "jvm":
-    # the engine's stats path since r4: whole-stage-codegen positional
-    # window counts, zero Arrow/Python crossing (oracle-gated as
-    # doc_windows_counts_jvm; differential vs the kernel in tests)
-    ws = S.positional_window_counts(pages, window=1000,
-                                    id_cols=("host", "warc_ts"),
-                                    chars=("c", "g"))
-else:
-    ws = window_stats(pages, window=1000, id_cols=["host", "warc_ts"], f32=False,
-                      fields=["win_len", "cnt_g", "cnt_c"])
+ws = window_stats(pages, window=1000, id_cols=["host", "warc_ts"], f32=False,
+                  fields=["win_len", "cnt_g", "cnt_c"])
 agg = (ws.withWatermark("warc_ts", "10 minutes")
          .groupBy(F.window("warc_ts", "10 minutes").alias("w"), "host")
          .agg(F.count("*").alias("n_windows"), F.sum("win_len").alias("total_chars"),
@@ -83,7 +75,7 @@ spark.stop()
 """
 
 
-def run_once(pages: int, changelog: bool, map_side: str = "jvm") -> dict:
+def run_once(pages: int, changelog: bool) -> dict:
     # 32 concurrent parquet column batches of 8 KB strings (plus the
     # window explode in flight) want a big single-JVM heap in local mode —
     # the per-executor non-issue BASELINE.md's local-mode note describes;
@@ -94,7 +86,7 @@ def run_once(pages: int, changelog: bool, map_side: str = "jvm") -> dict:
         SPARK_ROCKSDB_CHANGELOG=str(changelog).lower(),
         SPARK_DRIVER_MEMORY=os.environ.get("SPARK_DRIVER_MEMORY", "48g"),
     )
-    code = RUNNER.format(repo=REPO, pages=pages, map_side=map_side)
+    code = RUNNER.format(repo=REPO, pages=pages)
     proc = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
         timeout=1800, env=env,
@@ -104,7 +96,6 @@ def run_once(pages: int, changelog: bool, map_side: str = "jvm") -> dict:
         raise RuntimeError("sustained run failed")
     res = json.loads(proc.stdout.strip().splitlines()[-1])
     res["changelog"] = changelog
-    res["map_side"] = map_side
     return res
 
 
@@ -112,15 +103,12 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", type=int, default=1_000_000)
     ap.add_argument("--repeats", type=int, default=1)
-    ap.add_argument("--map-side", default="jvm", choices=["jvm", "arrow"],
-                    help="jvm = positional_window_counts (r4 default, zero "
-                         "Python crossing); arrow = the pre-r4 window kernel")
     args = ap.parse_args()
 
     runs = []
     for i in range(args.repeats):
         for changelog in (False, True):
-            r = run_once(args.pages, changelog, args.map_side)
+            r = run_once(args.pages, changelog)
             runs.append(r)
             print(json.dumps({"rep": i, **{k: r[k] for k in
                   ("changelog", "wall_sec", "windows_per_sec", "state_commit_sec")}}),
@@ -129,7 +117,6 @@ def main():
     report = dict(
         pages=args.pages, page_bytes=8192,
         gb_text=round(args.pages * 8192 / 1e9, 2), cores=32, finished=True,
-        map_side=args.map_side,
         wall_sec=best["wall_sec"], n_agg_rows=best["n_agg_rows"],
         n_windows=best["n_windows"], windows_per_sec=best["windows_per_sec"],
         mb_per_sec=best["mb_per_sec"], state_rows_peak=best["state_rows_peak"],
@@ -137,13 +124,11 @@ def main():
             "changelog" if best["changelog"] else "full-snapshot"
         ),
         all_runs=[{k: r[k] for k in
-                   ("changelog", "map_side", "wall_sec", "windows_per_sec",
+                   ("changelog", "wall_sec", "windows_per_sec",
                     "state_commit_sec")}
                   for r in runs],
     )
-    suffix = "" if args.map_side == "arrow" else "_jvm"
-    json.dump(report, open(
-        os.path.join(REPO, "BENCH", f"sustained_1m{suffix}.json"), "w"))
+    json.dump(report, open(os.path.join(REPO, "BENCH", "sustained_1m.json"), "w"))
     print(json.dumps(report))
     import bench_scaling
 

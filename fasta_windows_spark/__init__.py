@@ -2,8 +2,6 @@
 (see README.md / SURVEY.md). Public API re-exports."""
 
 from .kernels import (  # noqa: F401
-    batch_window_stats,
-    batch_window_stats_concat,
     ctw_bits_per_base,
     entropy6,
     kmer_names,

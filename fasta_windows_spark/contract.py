@@ -3192,7 +3192,7 @@ def docs_window_drift(spark, sf_dir):
     """Per-window distribution-shift monitor (streaming/drift.
     window_drift) — the STREAMING operator itself, hash-gated through its
     batch face (window() groups bounded frames identically and the
-    watermark is a batch no-op, the doc_windows_counts_jvm precedent):
+    watermark is a batch no-op):
     pages get event-time minutes (doc_id-derived, hour-aligned epoch
     base), tokens hash into 64 md5 buckets, ONE windowed JVM HashAggregate
     reduces each hour window to bucket counts, and the exact TV distance
@@ -8901,7 +8901,7 @@ def emb_pq_search(spark, sf_dir):
 
 
 @q(
-    "doc_windows_counts_jvm",
+    "doc_windows_counts",
     f"""
 WITH {SQL_WINS}
 SELECT doc_id, w_start, w_end,
@@ -8911,19 +8911,14 @@ SELECT doc_id, w_start, w_end,
 FROM win2
 """,
 )
-def doc_windows_counts_jvm(spark, sf_dir):
-    """The scaling bench's stats map side under the driver hash gate: the
-    pure-JVM positional-window count path (whole-stage codegen, zero
-    Arrow/Python crossing — streaming/pipeline.positional_window_counts)
-    over the documents table. Same numbers as the Arrow kernel's
-    win_len/cnt_c/cnt_g fields (differential-tested in
-    tests/test_streaming.py); here the ORACLE also pins them, so the path
-    that produced the scored 0.812 scaling pair is itself hash-gated."""
-    from .streaming.pipeline import positional_window_counts
-
-    return positional_window_counts(
-        _docs(spark, sf_dir), window=W, id_cols=("doc_id",), chars=("c", "g")
-    ).select("doc_id", "w_start", "w_end", "win_len", "cnt_c", "cnt_g")
+def doc_windows_counts(spark, sf_dir):
+    """The headline stream's window map side under the oracle hash gate:
+    the Arrow window kernel with fields= projection pushdown, so only the
+    three consumed count scalars cross back from Python — the exact call
+    shape of the headline host-window aggregate."""
+    return _ws(spark, sf_dir, fields=["win_len", "cnt_c", "cnt_g"]).select(
+        "doc_id", "w_start", "w_end", "win_len", "cnt_c", "cnt_g"
+    )
 
 
 @q(

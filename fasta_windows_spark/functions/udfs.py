@@ -3,13 +3,13 @@
 The central operator is :func:`window_stats` — the Spark re-expression of the
 reference's whole per-window pipeline (fw.rs:85-128): explode each document's
 text into positional windows and compute every per-window statistic, in ONE
-``mapInPandas`` pass with zero per-row Python (BASELINE.json input_hint).
+``mapInArrow`` pass with zero per-row Python (BASELINE.json input_hint).
 
 Architecture note (100 TB): positional windows live entirely inside one row,
 so this stage is a narrow transformation — no shuffle, no state; it scales
 linearly with input splits. Only event-time grouping (streaming module) and
 the final export sort ever shuffle. Column pruning still works upstream of
-mapInPandas: we select only the needed input columns before the UDF, so the
+mapInArrow: we select only the needed input columns before the UDF, so the
 parquet scan never reads unused columns (e.g. the `html` binary).
 """
 
@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.types as T
 
-from ..kernels import KMER_KS, batch_window_stats, stats_table, ctw_bits_per_base
+from ..kernels import KMER_KS, batch_window_stats_concat_sliding, stats_table
 
 # scalar stats emitted per window (names are the queries()/oracle contract)
 SCALAR_FIELDS = [
@@ -94,88 +94,9 @@ def window_stats_schema(
     return T.StructType(out)
 
 
-def window_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_cols: list | None = None,
-    window: int = 100,
-    step: int | None = None,
-    masked: bool = False,
-    with_ctw: bool = False,
-    with_vectors: bool = False,
-    f32: bool = True,
-    use_arrow: bool | None = None,
-    fields: list | None = None,
-) -> DataFrame:
-    """Explode `df` into positional windows of `text_col` with all statistics.
-
-    One output row per (document, window). `id_cols` pass through unchanged.
-    ``f32`` keeps the reference's f32 division semantics; oracle-checked
-    queries pass f32=False and round at the edge.
-
-    ``fields``: emit only these scalar stat columns (default all). This is
-    projection pushdown through the Python boundary — Catalyst cannot prune
-    columns INSIDE a mapInArrow, so a downstream agg that needs 3 of the 22
-    scalars would otherwise pay Arrow IPC for all 22 on every window. The
-    kernel still computes its fused tables; only finisher emission is cut.
-
-    use_arrow (default True): mapInArrow fast path — the text column's
-    Arrow layout (one concatenated UTF-8 buffer + offsets) feeds the kernel
-    ZERO-COPY, skipping pandas/Python-string materialization entirely
-    (~5x on large pages). Sliding windows run as ceil(window/step)
-    phase-shifted vectorized passes (kernels.batch_window_stats_concat_sliding);
-    use_arrow=False keeps the row-at-a-time reference path for differential
-    testing.
-    """
-    if use_arrow is None:
-        use_arrow = True
-    if use_arrow:
-        return _window_stats_arrow(
-            df, text_col, id_cols, window, step, masked, with_ctw, with_vectors,
-            f32, fields
-        )
-    id_cols = id_cols or ["doc_id"]
-    in_df = df.select(*id_cols, text_col)  # column pruning before the UDF
-    id_fields = [(c, in_df.schema[c].dataType) for c in id_cols]
-    schema = window_stats_schema(
-        [(n, t) for n, t in id_fields], with_ctw, with_vectors, fields
-    )
-    emit_fields = _scalar_fields(fields)
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = pdf[text_col].tolist()
-            doc_idx, starts, ends, hists, kvecs, ctw = batch_window_stats(
-                texts, window, step, masked, with_ctw
-            )
-            if len(starts) == 0:
-                # a zero-window batch (e.g. all-empty texts) must not yield:
-                # an empty pandas frame loses the object dtype the vector
-                # columns need for Arrow list conversion
-                continue
-            st = stats_table(hists, kvecs, masked=masked, f32=f32)
-            out = {}
-            for c in id_cols:
-                out[c] = pdf[c].to_numpy()[doc_idx]
-            out["w_start"] = starts
-            out["w_end"] = ends
-            for name, _ in emit_fields:
-                out[name] = st[_STAT_KEY.get(name, name)]
-            if with_ctw:
-                out["ctw"] = ctw
-            res = pd.DataFrame(out)
-            if with_vectors:
-                for k in KMER_KS:
-                    res[f"k{k}_vec"] = list(kvecs[k].astype(np.int32))
-            yield res
-
-    return in_df.mapInPandas(compute, schema=schema)
-
-
 def _arrow_string_parts(col):
     """Zero-copy (data uint8 view, per-row lengths) from an Arrow string
     array — Arrow's layout IS the kernel's concatenated-buffer input."""
-    import numpy as np
     import pyarrow as pa
 
     if col.null_count:
@@ -199,10 +120,11 @@ def _arrow_string_parts(col):
 # bincount keys, per-window count matrices) are ~25-30x the text bytes, so
 # the chunk must be sized for the PRIVATE L2 (2 MB/core here), not the
 # shared L3: with 32 KB text the whole kernel working set is ~1 MB and every
-# core runs cache-resident. Measured on this host (pure multiprocessing,
-# batch_window_stats_concat, W=1000): 2 MB chunks = 11 MB/s/core at 4 procs
-# collapsing to 4.7 at 16 (L3 blown, DRAM-throttled VM); 32 KB chunks =
-# 37 MB/s/core at BOTH 4 and 16 procs (597 MB/s aggregate, 0.99 scaling).
+# core runs cache-resident. Measured on a 32-vCPU VM with 2 MB L2 per core
+# (pure multiprocessing, tumbling kernel, W=1000): 2 MB chunks =
+# 11 MB/s/core at 4 procs collapsing to 4.7 at 16 (L3 blown,
+# DRAM-throttled VM); 32 KB chunks = 37 MB/s/core at BOTH 4 and 16 procs
+# (597 MB/s aggregate, 0.99 scaling).
 CHUNK_TEXT_BYTES = 32 << 10
 
 # Output grouping: per-chunk results are tiny (32 windows); building Arrow
@@ -213,8 +135,6 @@ EMIT_TEXT_BYTES = 4 << 20
 
 def _doc_chunks(lengths, target_bytes: int = CHUNK_TEXT_BYTES):
     """Doc-aligned (row_start, row_end, byte_start, byte_end) chunks."""
-    import numpy as np
-
     out = []
     r0 = b0 = acc = 0
     for i, ln in enumerate(np.asarray(lengths)):
@@ -267,22 +187,44 @@ def _doc_segments(length: int, window: int, step: int, target_bytes: int):
     return out
 
 
-def _window_stats_arrow(
-    df, text_col, id_cols, window, step, masked, with_ctw, with_vectors, f32,
-    fields=None,
-):
-    import numpy as np
-    import pyarrow as pa
+def window_stats(
+    df: DataFrame,
+    text_col: str = "text",
+    id_cols: list | None = None,
+    window: int = 100,
+    step: int | None = None,
+    masked: bool = False,
+    with_ctw: bool = False,
+    with_vectors: bool = False,
+    f32: bool = True,
+    fields: list | None = None,
+) -> DataFrame:
+    """Explode `df` into positional windows of `text_col` with all statistics.
 
-    from ..kernels import batch_window_stats_concat_sliding, stats_table
+    One output row per (document, window). `id_cols` pass through unchanged.
+    ``f32`` keeps the reference's f32 division semantics; oracle-checked
+    queries pass f32=False and round at the edge. Window positions and
+    lengths count UTF-8 BYTES (the reference's u8 contract, seq_statsu8.rs).
+
+    ``fields``: emit only these scalar stat columns (default all). This is
+    projection pushdown through the Python boundary — Catalyst cannot prune
+    columns INSIDE a mapInArrow, so a downstream agg that needs 3 of the 22
+    scalars would otherwise pay Arrow IPC for all 22 on every window. The
+    kernel still computes its fused tables; only finisher emission is cut.
+
+    The text column's Arrow layout (one concatenated UTF-8 buffer +
+    offsets) feeds the kernel ZERO-COPY, skipping pandas/Python-string
+    materialization entirely. Sliding windows run as ceil(window/step)
+    phase-shifted vectorized passes
+    (kernels.batch_window_stats_concat_sliding).
+    """
+    import pyarrow as pa
 
     id_cols = id_cols or ["doc_id"]
     in_df = df.select(*id_cols, text_col)
     id_fields = [(c, in_df.schema[c].dataType) for c in id_cols]
     schema = window_stats_schema(id_fields, with_ctw, with_vectors, fields)
     emit_fields = _scalar_fields(fields)
-
-    from ..kernels import KMER_KS as _KS
 
     # rows per output RecordBatch: Arrow list offsets are int32, so a slice
     # must keep n * 4^kmax < 2^31 (a single huge doc at step=1 can produce
@@ -299,13 +241,13 @@ def _window_stats_arrow(
         starts = np.concatenate([p[1] for _, p in parts])
         ends = np.concatenate([p[2] for _, p in parts])
         hists = np.vstack([p[3] for _, p in parts])
-        kvecs = {k: np.vstack([p[4][k] for _, p in parts]) for k in _KS}
+        kvecs = {k: np.vstack([p[4][k] for _, p in parts]) for k in KMER_KS}
         ctw = (
             np.concatenate([p[5] for _, p in parts]) if with_ctw else None
         )
         for s0 in range(0, len(starts), EMIT_MAX_WINDOWS):
             s1 = min(s0 + EMIT_MAX_WINDOWS, len(starts))
-            sl_kvecs = {k: kvecs[k][s0:s1] for k in _KS}
+            sl_kvecs = {k: kvecs[k][s0:s1] for k in KMER_KS}
             st = stats_table(hists[s0:s1], sl_kvecs, masked=masked, f32=f32)
             take = pa.array(doc_idx[s0:s1], type=pa.int64())
             arrays, names = [], []
@@ -325,8 +267,8 @@ def _window_stats_arrow(
                 if name.startswith("cnt_") or name == "win_len":
                     arrays.append(pa.array(np.asarray(vals, dtype=np.int64)))
                 else:
-                    # from_pandas=True: NaN -> NULL, matching the pandas
-                    # path and the oracles' nullif() convention
+                    # from_pandas=True: NaN -> NULL, matching the
+                    # oracles' nullif() convention
                     arrays.append(
                         pa.array(np.asarray(vals, dtype=np.float64), from_pandas=True)
                     )
@@ -359,7 +301,7 @@ def _window_stats_arrow(
             starts[sl] + base,
             ends[sl] + base,
             hists[sl],
-            {k: kvecs[k][sl] for k in _KS},
+            {k: kvecs[k][sl] for k in KMER_KS},
             ctw[sl] if with_ctw else None,
         )
 
@@ -427,6 +369,7 @@ def _window_stats_arrow(
                 yield from emit(full_batch, parts)
 
     return in_df.mapInArrow(compute, schema=schema)
+
 
 
 def ctw_udf_frame(

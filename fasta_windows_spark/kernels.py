@@ -3,7 +3,7 @@
 These are the vectorized re-expressions of the reference's Rust kernels
 (tolkit/fasta_windows). Each function documents the reference file:line it
 re-implements. No Spark imports here — this module is unit-testable standalone
-and is wrapped by Arrow-batched pandas UDFs in ``functions/udfs.py``.
+and is wrapped by the Arrow-batched UDFs in ``functions/udfs.py``.
 
 Semantics notes (see SURVEY.md §7 "known-hard items"):
 - k-mer counting uses a dense 4^k array indexed by 2-bit codes
@@ -40,7 +40,7 @@ __all__ = [
     "reverse_complement",
     "window_bounds",
     "page_window_stats",
-    "batch_window_stats",
+    "batch_window_stats_concat_sliding",
     "KMER_KS",
     "kmer_names",
 ]
@@ -575,64 +575,7 @@ def window_bounds(length: int, window: int, step: int | None = None):
     return out
 
 
-# --- the fused per-page multi-window kernel (mapInPandas workhorse) -----------
-
-# Scalar stat column order produced by page_window_stats / batch_window_stats.
-STAT_FIELDS = [
-    "gc_prop",
-    "gc_skew",
-    "at_skew",
-    "shannon_entropy",
-    "prop_g",
-    "prop_c",
-    "prop_a",
-    "prop_t",
-    "prop_n",
-    "prop_masked",
-    "cpg_prop",
-    "dinuc_shannon",
-    "trinuc_shannon",
-    "tetranuc_shannon",
-    "entropy6",
-    "kt0",
-]
-
-
-def batch_window_stats(
-    texts: list,
-    window: int,
-    step: int | None = None,
-    masked: bool = False,
-    with_ctw: bool = False,
-    ks: tuple = KMER_KS,
-):
-    """Compute all per-window statistics for a batch of pages in one pass.
-
-    The tumbling path concatenates every page in the batch into a single byte
-    buffer and assigns a global window id to each byte position, then computes
-    ALL windows' byte histograms and k-mer vectors with a handful of global
-    ``np.bincount`` calls — one Python iteration per Arrow batch, zero per-row
-    Python (BASELINE.json input_hint). This is the Spark-side analog of the
-    reference's rayon record×k parallelism (fw.rs:67, kmeru8.rs:35) collapsed
-    into columnar form.
-
-    Returns (doc_idx, starts, ends, hists[nwin,256], kvecs{k: [nwin,4^k]},
-    ctw[nwin] or None).
-    """
-    if step is None:
-        step = window
-
-    bufs = [_as_bytes(t if t is not None else "") for t in texts]
-    lengths = np.array([len(b) for b in bufs], dtype=np.int64)
-
-    if step == window:
-        buf = (
-            np.concatenate([b for b in bufs if len(b)])
-            if lengths.sum()
-            else np.zeros(0, dtype=np.uint8)
-        )
-        return batch_window_stats_concat(buf, lengths, window, with_ctw, ks)
-    return _batch_sliding(bufs, lengths, window, step, with_ctw, ks)
+# --- the fused multi-page multi-window kernel (mapInArrow workhorse) ---------
 
 
 def _kgram_codes(buf: np.ndarray, ks=KMER_KS) -> dict:
@@ -689,94 +632,23 @@ def _kgram_codes(buf: np.ndarray, ks=KMER_KS) -> dict:
     return out
 
 
-def batch_window_stats_concat(buf, lengths, window, with_ctw=False, ks=KMER_KS):
-    """Tumbling-window kernel over a PRE-CONCATENATED byte buffer with
-    per-document lengths — the zero-copy entry point for Arrow string
-    columns, whose layout is exactly (data buffer, offsets). Same return
-    shape as batch_window_stats."""
-    buf = np.asarray(buf, dtype=np.uint8)
-    lengths = np.asarray(lengths, dtype=np.int64)
-    n_docs = len(lengths)
-    nwins = np.maximum((lengths + window - 1) // window, 0)
-    nwins[lengths == 0] = 0
-    total_wins = int(nwins.sum())
-    win_base = np.concatenate([[0], np.cumsum(nwins)[:-1]]) if n_docs else np.array([], dtype=np.int64)
-
-    doc_idx = np.repeat(np.arange(n_docs), nwins)
-    # per-window starts/ends (vectorized: global win index minus its doc base)
-    local_win = np.arange(total_wins, dtype=np.int64) - np.repeat(win_base, nwins)
-    starts = local_win * window
-    ends = np.minimum(starts + window, np.repeat(lengths, nwins))
-
-    if total_wins == 0:
-        return (
-            doc_idx,
-            starts,
-            ends,
-            np.zeros((0, 256), dtype=np.int64),
-            {k: np.zeros((0, 4**k), dtype=np.int64) for k in ks},
-            np.zeros(0) if with_ctw else None,
-        )
-
-    # global window id per byte position — int32 throughout (a single Arrow
-    # batch is far below 2^31 positions/windows; asserted below)
-    assert total_wins * 257 < 2**31, "Arrow batch too large for int32 bins"
-    doc_starts = np.concatenate([[0], np.cumsum(lengths)[:-1]])
-    local_pos = np.arange(len(buf), dtype=np.int32) - np.repeat(
-        doc_starts.astype(np.int32), lengths
-    )
-    win_of_pos = np.repeat(win_base.astype(np.int32), lengths) + local_pos // np.int32(
-        window
-    )
-
-    # all byte histograms in one bincount
-    hists = np.bincount(
-        win_of_pos * np.int32(256) + buf, minlength=total_wins * 256
-    ).reshape(total_wins, 256)
-
-    # k-mer vectors: rolling 2-bit codes over the global buffer; a gram is
-    # valid iff all bytes are ACGT AND it does not cross a window boundary
-    # (windows never span docs, so doc boundaries come for free).
-    kvecs = {}
-    for k, (idx, ok) in _kgram_codes(buf, ks).items():
-        m = len(idx)
-        if m == 0:
-            kvecs[k] = np.zeros((total_wins, 4**k), dtype=np.int64)
-            continue
-        # same-window test (also rejects doc-crossing grams: window ids are
-        # globally unique per doc); invalid grams -> one trash bin, a single
-        # where-pass instead of two boolean gathers
-        okw = ok & (win_of_pos[:m] == win_of_pos[k - 1 : m + k - 1])
-        nbins = total_wins * (4**k)
-        combined = np.where(
-            okw, win_of_pos[:m] * np.int32(4**k) + idx[:m], np.int32(nbins)
-        )
-        kvecs[k] = (
-            np.bincount(combined, minlength=nbins + 1)[:nbins].reshape(
-                total_wins, 4**k
-            )
-        )
-
-    ctw = None
-    if with_ctw:
-        doc_starts_full = np.concatenate([[0], np.cumsum(lengths)])
-        slices = []
-        for w in range(total_wins):
-            base = int(doc_starts_full[int(doc_idx[w])])
-            slices.append(buf[base + int(starts[w]) : base + int(ends[w])])
-        ctw = ctw_bits_per_base_many(slices, 6)
-
-    return doc_idx, starts, ends, hists, kvecs, ctw
-
-
 def _concat_phase(buf, lengths, window, offset, period, with_ctw, ks, kcodes=None):
-    """One phase of the sliding decomposition: windows of length `window`
-    starting at offset + j*period within each doc (period >= window, so
-    windows in a phase never overlap; bytes in the inter-window gaps and
-    before the offset go to a trash bin). offset=0, period=window is plain
-    tumbling. `kcodes` = precomputed _kgram_codes(buf, ks) — phase-invariant,
-    so the sliding driver computes it once for all K phases. Same return
-    shape as batch_window_stats_concat."""
+    """Windows of length `window` starting at offset + j*period within each
+    doc of a PRE-CONCATENATED byte buffer with per-document lengths (the
+    Arrow string column layout: data buffer + offsets). period >= window,
+    so windows in a phase never overlap; bytes in the inter-window gaps and
+    before the offset go to a trash bin. offset=0, period=window is plain
+    tumbling — exactly `chunks(window_size)` (fw.rs:83).
+
+    ALL windows' byte histograms and k-mer vectors come from a handful of
+    global ``np.bincount`` calls over a per-byte window id — zero per-row
+    Python; the columnar analog of the reference's rayon record x k
+    parallelism (fw.rs:67, kmeru8.rs:35). `kcodes` = precomputed
+    _kgram_codes(buf, ks) — phase-invariant, so the sliding entry point
+    computes it once for all K phases.
+
+    Returns (doc_idx, starts, ends, hists[nwin,256], kvecs{k: [nwin,4^k]},
+    ctw[nwin] or None)."""
     buf = np.asarray(buf, dtype=np.uint8)
     lengths = np.asarray(lengths, dtype=np.int64)
     n_docs = len(lengths)
@@ -801,23 +673,43 @@ def _concat_phase(buf, lengths, window, offset, period, with_ctw, ks, kcodes=Non
             np.zeros(0) if with_ctw else None,
         )
 
+    # window ids and bincount keys are int32 throughout (one Arrow batch is
+    # far below 2^31 positions/windows)
     assert (total_wins + 1) * 257 < 2**31, "Arrow batch too large for int32 bins"
     doc_starts = np.concatenate([[0], np.cumsum(lengths)[:-1]])
-    local_pos = np.arange(len(buf), dtype=np.int64) - np.repeat(doc_starts, lengths)
-    q = local_pos - offset
-    in_win = (q >= 0) & (q % period < window)
-    win_of_pos = np.where(
-        in_win, np.repeat(win_base, lengths) + np.maximum(q, 0) // period, -1
-    ).astype(np.int32)
+    if offset == 0 and period == window:
+        # tumbling: every byte belongs to a window, so no gap mask and no
+        # trash bin (the masked form runs ~1.3x slower on a 32 KiB chunk
+        # of four 8 KiB pages at W=1000)
+        in_win = None
+        local_pos = np.arange(len(buf), dtype=np.int32) - np.repeat(
+            doc_starts.astype(np.int32), lengths
+        )
+        win_of_pos = np.repeat(win_base.astype(np.int32), lengths) + local_pos // np.int32(
+            window
+        )
+        hists = np.bincount(
+            win_of_pos * np.int32(256) + buf, minlength=total_wins * 256
+        ).reshape(total_wins, 256)
+    else:
+        local_pos = np.arange(len(buf), dtype=np.int64) - np.repeat(doc_starts, lengths)
+        q = local_pos - offset
+        in_win = (q >= 0) & (q % period < window)
+        win_of_pos = np.where(
+            in_win, np.repeat(win_base, lengths) + np.maximum(q, 0) // period, -1
+        ).astype(np.int32)
+        trash = np.int32(total_wins)
+        hkey = np.where(
+            in_win, win_of_pos * np.int32(256) + buf, trash * np.int32(256)
+        )
+        hists = np.bincount(hkey, minlength=(total_wins + 1) * 256)[
+            : total_wins * 256
+        ].reshape(total_wins, 256)
 
-    trash = np.int32(total_wins)
-    hkey = np.where(
-        in_win, win_of_pos * np.int32(256) + buf, trash * np.int32(256)
-    )
-    hists = np.bincount(hkey, minlength=(total_wins + 1) * 256)[
-        : total_wins * 256
-    ].reshape(total_wins, 256)
-
+    # k-mer vectors: a gram counts iff all its bytes are ACGT AND its first
+    # and last byte share a window (window ids are globally unique per doc,
+    # so doc-crossing grams fail the same test); rejected grams go to one
+    # trash bin — a single where-pass instead of two boolean gathers
     kvecs = {}
     for k, (idx, ok) in (kcodes or _kgram_codes(buf, ks)).items():
         m = len(idx)
@@ -825,8 +717,9 @@ def _concat_phase(buf, lengths, window, offset, period, with_ctw, ks, kcodes=Non
             kvecs[k] = np.zeros((total_wins, 4**k), dtype=np.int64)
             continue
         w0 = win_of_pos[:m]
-        wk = win_of_pos[k - 1 : m + k - 1]
-        okw = ok & (w0 >= 0) & (w0 == wk)
+        okw = ok & (w0 == win_of_pos[k - 1 : m + k - 1])
+        if in_win is not None:
+            okw &= w0 >= 0
         nbins = total_wins * (4**k)
         combined = np.where(okw, w0 * np.int32(4**k) + idx[:m], np.int32(nbins))
         kvecs[k] = np.bincount(combined, minlength=nbins + 1)[:nbins].reshape(
@@ -848,14 +741,18 @@ def _concat_phase(buf, lengths, window, offset, period, with_ctw, ks, kcodes=Non
 def batch_window_stats_concat_sliding(
     buf, lengths, window, step, with_ctw=False, ks=KMER_KS
 ):
-    """Vectorized SLIDING windows over a concatenated buffer: decomposed into
-    K = ceil(window/step) phase-shifted non-overlapping passes through
-    :func:`_concat_phase` (phase g covers starts g*step + j*K*step), results
-    merged and re-sorted to window_bounds order (doc, start). Total cost is
-    K kernel passes — proportional to the output volume, i.e. the inherent
-    cost of overlap. Handles step > window (gapped sampling windows) too."""
+    """The production window kernel: every window of every doc in a
+    concatenated buffer (see :func:`_concat_phase` for the layout and the
+    return shape), in window_bounds order (doc, start).
+
+    Tumbling (step None or == window) is one :func:`_concat_phase` pass.
+    Sliding windows decompose into K = ceil(window/step) phase-shifted
+    non-overlapping passes (phase g covers starts g*step + j*K*step),
+    merged and re-sorted. Total cost is K kernel passes — proportional to
+    the output volume, i.e. the inherent cost of overlap. Handles
+    step > window (gapped sampling windows) too."""
     if step is None or step == window:
-        return batch_window_stats_concat(buf, lengths, window, with_ctw, ks)
+        return _concat_phase(buf, lengths, window, 0, window, with_ctw, ks)
     K = max(1, -(-window // step))  # ceil
     period = K * step
     kcodes = _kgram_codes(np.asarray(buf, dtype=np.uint8), ks)  # once, not per phase
@@ -871,32 +768,6 @@ def batch_window_stats_concat_sliding(
     kvecs = {k: np.vstack([p[4][k] for p in parts])[order] for k in ks}
     ctw = np.concatenate([p[5] for p in parts])[order] if with_ctw else None
     return doc_idx[order], starts[order], ends[order], hists, kvecs, ctw
-
-
-def _batch_sliding(bufs, lengths, window, step, with_ctw, ks):
-    doc_idx_l, starts_l, ends_l, hist_l = [], [], [], []
-    kvec_l = {k: [] for k in ks}
-    ctw_l = []
-    for d, b in enumerate(bufs):
-        for s, e in window_bounds(len(b), window, step):
-            win = b[s:e]
-            doc_idx_l.append(d)
-            starts_l.append(s)
-            ends_l.append(e)
-            hist_l.append(np.bincount(win, minlength=256))
-            for k in ks:
-                kvec_l[k].append(kmer_vector(win, k))
-            if with_ctw:
-                ctw_l.append(ctw_bits_per_base(win, 6))
-    n = len(starts_l)
-    return (
-        np.array(doc_idx_l, dtype=np.int64),
-        np.array(starts_l, dtype=np.int64),
-        np.array(ends_l, dtype=np.int64),
-        np.array(hist_l, dtype=np.int64).reshape(n, 256),
-        {k: np.array(kvec_l[k], dtype=np.int64).reshape(n, 4**k) for k in ks},
-        np.array(ctw_l) if with_ctw else None,
-    )
 
 
 _FOLD_PAIRS = [(ord(c), ord(c) - 32) for c in "acgtn"]  # lower -> upper
@@ -1040,20 +911,21 @@ def stats_table(hists: np.ndarray, kvecs: dict, masked: bool = False, f32: bool 
 
 
 def page_window_stats(text, window: int, step: int | None = None, masked: bool = False, with_ctw: bool = False):
-    """Single-page convenience wrapper: list of per-window stat dicts
-    (fixture/oracle path; the Spark path uses batch_window_stats)."""
-    doc_idx, starts, ends, hists, kvecs, ctw = batch_window_stats(
-        [text], window, step, masked, with_ctw
-    )
+    """Independent per-window reference: a list of per-window stat dicts,
+    one scalar-kernel call per window over :func:`window_bounds` — shares
+    no code with the batch kernel, so tests and the TSV gate check the
+    production path against it (fixture/oracle path only)."""
+    buf = _as_bytes(text if text is not None else "")
     out = []
-    for i in range(len(starts)):
+    for s, e in window_bounds(len(buf), window, step):
+        win = buf[s:e]
         st = scalar_stats_from_vectors(
-            hists[i], {k: kvecs[k][i] for k in KMER_KS}, masked
+            byte_hist(win), {k: kmer_vector(win, k) for k in KMER_KS}, masked
         )
-        st["start"] = int(starts[i])
-        st["end"] = int(ends[i])
+        st["start"] = s
+        st["end"] = e
         if with_ctw:
-            st["ctw"] = float(ctw[i])
+            st["ctw"] = ctw_bits_per_base(win, 6)
         out.append(st)
     return out
 

@@ -37,10 +37,6 @@ from pyspark.sql import functions as F
 BM25_SCALE_NOTE = "exact below 2^53: num <= (2N+1)*22*tf*S, den <= (2df+1)*(10*tf+3)*S+9*dl*N terms"
 
 
-def _term_cols(terms) -> list:
-    return [f"tf_{t}" for t in terms]
-
-
 def per_doc_term_stats(
     docs: DataFrame, terms, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -103,18 +103,6 @@ def widen_scan(df, target: int | None = None):
     return df
 
 
-def testdata_dir(sf: str | float = "0.01") -> str:
-    return f"/root/testdata/sf{sf}"
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=None) -> dict:
-    names = names or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
-
-
 def write_bucketed(
     df,
     table: str,

@@ -3,8 +3,8 @@ reference's windowed statistics (SURVEY.md §2.7, north_rule).
 
 Hot path shape: watermark-bounded windowed hash-aggregate in the RocksDB
 state store (partial aggregation before the shuffle is automatic for
-streaming aggs), fed by JVM count expressions / Arrow-batched kernels —
-zero per-row Python.
+streaming aggs), fed by JVM count expressions / the Arrow-batched window
+kernel — zero per-row Python.
 
 Sinks: the production target is an Iceberg table (exactly-once via
 idempotent epoch commits); this sandbox has no Iceberg runtime jar, so the
@@ -61,65 +61,6 @@ def _char_count(col: str, ch: str) -> F.Column:
     base = F.length(col) - F.length(F.replace(F.col(col), F.lit(ch)))
     low = F.length(col) - F.length(F.replace(F.col(col), F.lit(ch.lower())))
     return (base + low).cast("long")
-
-
-def positional_window_counts(
-    df: DataFrame,
-    window: int = 1000,
-    id_cols: tuple = ("host", "warc_ts"),
-    text_col: str = "text",
-    chars: tuple = ("c", "g"),
-) -> DataFrame:
-    """JVM-expression twin of ``functions.udfs.window_stats`` for the count
-    fields (win_len, cnt_*): positional tumbling windows via
-    explode(sequence), per-window counts via substring + case-folded
-    replace — whole-stage codegen end to end, ZERO Arrow/Python crossing.
-
-    Why it exists: the round-3 scaling ledger (BENCH/BASELINE.md)
-    attributed the stats-mode 2→8 efficiency gap largely to 0.39 GB of
-    Arrow IPC crossing into Python per run (DRAM-bandwidth-sensitive, so
-    it inflates disproportionately at higher core counts). For jobs whose
-    downstream agg consumes only count fields, this path keeps the whole
-    map side inside the JVM; the Arrow kernel path remains the one that
-    can emit entropies/k-mer vectors. Window semantics are pinned to the
-    kernel by tests (kernels.window_bounds: tumbling from 0, final window
-    truncated, zero-length text yields no windows; counts fold case like
-    stats_table's unmasked branch).
-
-    Unit-of-length note: this path (and the SQL oracles) counts
-    CHARACTERS — Spark/DuckDB length/substring are codepoint-based —
-    while the Arrow kernel counts UTF-8 BYTES (the reference's u8
-    contract, seq_statsu8.rs). The two coincide exactly on ASCII text
-    (the reference's whole domain, and the engine's synthetic corpora);
-    on multi-byte web text windows differ by design, pinned in
-    tests/test_streaming.py::test_positional_window_counts_unicode_semantics.
-    """
-    w = int(window)
-    d = (
-        df.where(F.length(text_col) > 0)
-        .withColumn(
-            "w_start",
-            F.explode(F.expr(f"sequence(0L, length({text_col}) - 1L, {w})")),
-        )
-        .withColumn(
-            "_win",
-            F.expr(f"substring({text_col}, cast(w_start + 1 as int), {w})"),
-        )
-    )
-    out = [
-        *id_cols,
-        F.col("w_start"),
-        (F.col("w_start") + F.length("_win")).cast("long").alias("w_end"),
-        F.length("_win").cast("long").alias("win_len"),
-    ]
-    for ch in chars:
-        cnt = (
-            2 * F.length("_win")
-            - F.length(F.replace(F.col("_win"), F.lit(ch.upper())))
-            - F.length(F.replace(F.col("_win"), F.lit(ch.lower())))
-        ).cast("long")
-        out.append(cnt.alias(f"cnt_{ch.lower()}"))
-    return d.select(*out)
 
 
 def page_count_columns(
@@ -283,49 +224,37 @@ def host_session_stats(
     )
 
 
-KMER_LONG_SCHEMA = T.StructType(
-    [
-        T.StructField("host", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("k", T.IntegerType()),
-        T.StructField("idx", T.IntegerType()),
-        T.StructField("cnt", T.LongType()),
-    ]
-)
-
-
 def kmer_long_rows(pages: DataFrame, ks=(2, 3, 4), window_chars: int | None = None) -> DataFrame:
     """Per-page k-mer count vectors in LONG format (host, warc_ts, k, idx,
     cnt): the scalable streaming representation of the dense 4^k arrays —
     merging = built-in sum per (window, host, k, idx), so the streaming
     hash-aggregate needs no array UDAF and state stays per-key-small.
-    window_chars: optionally split pages into positional windows first
-    (None = whole page, the event-time-window use case)."""
-    from ..kernels import batch_window_stats
+    window_chars: optionally split pages into positional windows of this
+    many UTF-8 bytes first (None = whole page, the event-time-window use
+    case). The vectors come from the Arrow window kernel; the long form is
+    a JVM posexplode that keeps nonzero counts only."""
+    from ..functions.udfs import window_stats
 
-    import pandas as pd
-
-    def compute(batches):
-        for pdf in batches:
-            texts = pdf["text"].tolist()
-            w = window_chars or (1 << 30)
-            _, starts, _, _, kvecs, _ = batch_window_stats(texts, w, ks=ks)
-            # long-format: one row per nonzero (page, k, idx)
-            out = {"host": [], "warc_ts": [], "k": [], "idx": [], "cnt": []}
-            import numpy as np
-
-            for k in ks:
-                mat = kvecs[k]
-                page_i, idx = np.nonzero(mat)
-                out["host"].extend(pdf["host"].to_numpy()[page_i])
-                out["warc_ts"].extend(pdf["warc_ts"].to_numpy()[page_i])
-                out["k"].extend([k] * len(idx))
-                out["idx"].extend(idx.tolist())
-                out["cnt"].extend(mat[page_i, idx].tolist())
-            yield pd.DataFrame(out)
-
-    return with_host(pages).select("host", "warc_ts", "text").mapInPandas(
-        compute, KMER_LONG_SCHEMA
+    ws = window_stats(
+        with_host(pages),
+        id_cols=["host", "warc_ts"],
+        window=window_chars or (1 << 30),
+        with_vectors=True,
+        fields=[],
+    )
+    vecs = F.array(
+        *[F.struct(F.lit(k).alias("k"), F.col(f"k{k}_vec").alias("vec")) for k in ks]
+    )
+    return (
+        ws.select("host", "warc_ts", F.explode(vecs).alias("kv"))
+        .select(
+            "host",
+            "warc_ts",
+            F.col("kv.k").alias("k"),
+            F.posexplode("kv.vec").alias("idx", "cnt"),
+        )
+        .where(F.col("cnt") > 0)
+        .select("host", "warc_ts", "k", "idx", F.col("cnt").cast("long").alias("cnt"))
     )
 
 

@@ -13,7 +13,6 @@ from __future__ import annotations
 from typing import Any, Iterable
 
 import pandas as pd
-import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -103,104 +102,5 @@ def host_state_agg(pages: DataFrame, watermark: str = "1 minute") -> DataFrame:
             stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def host_state_agg_tws(pages: DataFrame, watermark: str = "1 minute") -> DataFrame:
-    """Same per-host incremental aggregation on the Spark 4
-    ``transformWithStateInPandas`` API (StatefulProcessor + ValueState +
-    event-time timer): the successor to applyInPandasWithState, with typed
-    state handles and per-key timers instead of a single tuple + timeoutConf.
-    Both implementations are kept: applyInPandasWithState is the stable API,
-    this is the forward path (state schema evolution, multiple state vars).
-    Runtime requirement: the TWS state-server protocol needs google.protobuf
-    on the Python workers (absent in this sandbox — its test self-skips)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    from .pipeline import with_host
-
-    class HostAgg(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.state = handle.getValueState(
-                "acc",
-                "n_pages LONG, total_chars LONG, a LONG, c LONG, g LONG, "
-                "t LONG, n LONG, max_ts LONG",
-            )
-
-        def handleInputRows(self, key, rows, timerValues: TimerValues):
-            import numpy as np
-
-            tot = np.zeros(7, dtype=np.int64)
-            max_ts = 0
-            for pdf in rows:
-                texts = pdf["text"].fillna("")
-                tot[0] += len(pdf)
-                tot[1] += int(texts.str.len().sum())
-                # one byte-histogram pass (see _update above)
-                buf = np.frombuffer(
-                    "".join(texts.tolist()).encode(), dtype=np.uint8
-                )
-                hist = np.bincount(buf, minlength=128)
-                for i, ch in enumerate("ACGTN"):
-                    tot[2 + i] += int(hist[ord(ch)] + hist[ord(ch.lower())])
-                max_ts = max(
-                    max_ts, int(pdf["warc_ts"].astype("int64").max() // 1_000_000)
-                )
-            prev = self.state.get() if self.state.exists() else (0,) * 8
-            new = tuple(int(prev[i] + tot[i]) for i in range(7)) + (
-                max(prev[7], max_ts),
-            )
-            self.state.update(new)
-            # emit once the watermark passes last event + 30s of host silence.
-            # registerTimer ADDS a timer (unlike applyInPandasWithState's
-            # setTimeoutTimestamp, which replaces): drop stale timers first,
-            # else an old timer fires mid-activity and emits a partial row.
-            for t in list(self.handle.listTimers()):
-                self.handle.deleteTimer(t)
-            self.handle.registerTimer(new[7] + 30_000)
-            return iter(())
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ):
-            if not self.state.exists():
-                return iter(())
-            n_pages, total_chars, a, c, g, t, n, _ = self.state.get()
-            self.state.clear()
-            (host,) = key
-            yield pd.DataFrame(
-                [
-                    {
-                        "host": host,
-                        "n_pages": n_pages,
-                        "total_chars": total_chars,
-                        "cnt_a": a,
-                        "cnt_c": c,
-                        "cnt_g": g,
-                        "cnt_t": t,
-                        "cnt_n": n,
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    p = with_host(pages).withWatermark("warc_ts", watermark)
-    return (
-        p.select("host", "warc_ts", "text")
-        .groupBy("host")
-        .transformWithStateInPandas(
-            HostAgg(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="EventTime",
         )
     )

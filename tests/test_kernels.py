@@ -241,32 +241,48 @@ def test_window_bounds_sliding():
     assert K.window_bounds(10, 4, 2) == [(0, 4), (2, 6), (4, 8), (6, 10), (8, 10)]
 
 
-def test_batch_window_stats_matches_single():
-    texts = ["ACGTACGTAC", "AAAA", "", "ACGTNNACGTACGGTTACGT"]
-    doc_idx, starts, ends, hists, kvecs, _ = K.batch_window_stats(texts, 4)
-    # cross-check every window against the scalar-path kernels
+def _concat_kernel(texts, window, step=None, with_ctw=False):
+    """The production kernel over texts laid out as an Arrow string column
+    (one concatenated byte buffer + per-doc lengths)."""
+    bufs = [t.encode() for t in texts]
+    lengths = np.array([len(b) for b in bufs], dtype=np.int64)
+    buf = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+    return K.batch_window_stats_concat_sliding(buf, lengths, window, step, with_ctw)
+
+
+def _assert_matches_scalar(texts, window, step=None, with_ctw=False):
+    """Every window of the production kernel == the scalar-path kernels on
+    the same window_bounds slice, in (doc, start) order."""
+    doc_idx, starts, ends, hists, kvecs, ctw = _concat_kernel(texts, window, step, with_ctw)
     i = 0
     for d, t in enumerate(texts):
-        for s, e in K.window_bounds(len(t), 4):
-            win = t[s:e].encode()
-            assert doc_idx[i] == d and starts[i] == s and ends[i] == e
+        buf = t.encode()
+        for s, e in K.window_bounds(len(buf), window, step):
+            win = buf[s:e]
+            assert (doc_idx[i], starts[i], ends[i]) == (d, s, e)
             assert np.array_equal(hists[i], K.byte_hist(win))
             for k in K.KMER_KS:
                 assert np.array_equal(kvecs[k][i], K.kmer_vector(win, k)), (d, s, k)
+            if with_ctw:
+                assert ctw[i] == pytest.approx(K.ctw_bits_per_base(win, 6), abs=1e-10)
             i += 1
     assert i == len(starts)
 
 
+def test_batch_window_stats_matches_single():
+    _assert_matches_scalar(["ACGTACGTAC", "AAAA", "", "ACGTNNACGTACGGTTACGT"], 4)
+
+
 def test_batch_window_stats_no_cross_window_grams():
     # one doc, window=4: gram GT at positions 3-4 crosses the boundary -> excluded
-    _, _, _, _, kvecs, _ = K.batch_window_stats(["ACGTACGT"], 4)
+    _, _, _, _, kvecs, _ = _concat_kernel(["ACGTACGT"], 4)
     per_window_sum = kvecs[2].sum(axis=1)
     assert list(per_window_sum) == [3, 3]  # 3 dinucs per 4-char window
 
 
 def test_batch_window_stats_no_cross_doc_grams():
     # two docs back to back: no gram spans the doc boundary
-    _, _, _, _, kvecs, _ = K.batch_window_stats(["AC", "GT"], 10)
+    _, _, _, _, kvecs, _ = _concat_kernel(["AC", "GT"], 10)
     assert kvecs[2].sum() == 2  # AC and GT only, no CG bridge
 
 
@@ -301,16 +317,9 @@ def test_ctw_vectorized_matches_scalar():
 
 
 def test_sliding_concat_matches_reference_path():
-    """Vectorized phase-decomposed sliding kernel == the row-at-a-time
-    reference path, across non-divisible strides, gapped (step > window),
-    stride-1, dirty bytes, empty/short docs, and CTW."""
-    import numpy as np
-
-    from fasta_windows_spark.kernels import (
-        _batch_sliding,
-        batch_window_stats_concat_sliding,
-    )
-
+    """Vectorized phase-decomposed sliding kernel == per-window scalar
+    kernels over window_bounds, across non-divisible strides, gapped
+    (step > window), stride-1, dirty bytes, empty/short docs, and CTW."""
     rng = np.random.default_rng(3)
     alpha = np.frombuffer(b"ACGTNacgtnXW ", dtype=np.uint8)
 
@@ -326,19 +335,7 @@ def test_sliding_concat_matches_reference_path():
         ([rnd(1000) for _ in range(5)], 100, 30, False),
     ]
     for texts, W, s, with_ctw in cases:
-        bufs = [t.encode() for t in texts]
-        lengths = np.array([len(b) for b in bufs], dtype=np.int64)
-        buf = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-        a = _batch_sliding(
-            [np.frombuffer(b, np.uint8) for b in bufs], lengths, W, s, with_ctw, (2, 3, 4)
-        )
-        b2 = batch_window_stats_concat_sliding(buf, lengths, W, s, with_ctw, (2, 3, 4))
-        assert np.array_equal(a[0], b2[0]) and np.array_equal(a[1], b2[1])
-        assert np.array_equal(a[2], b2[2]) and np.array_equal(a[3], b2[3])
-        for k in (2, 3, 4):
-            assert np.array_equal(a[4][k], b2[4][k])
-        if with_ctw:
-            assert np.allclose(a[5], b2[5], atol=1e-12)
+        _assert_matches_scalar(texts, W, s, with_ctw)
 
 
 def test_dinuc_oe_hand_computed(spark):

@@ -1,7 +1,8 @@
 """Oversized-document segmentation (ADVICE r1): a doc larger than
 OVERSIZE_DOC_BYTES is split into window-aligned sub-chunks with
 step-compatible overlap inside the Arrow kernel path, bounding per-call
-transients — output must stay bit-identical to whole-doc processing."""
+transients — output must equal the independent per-window reference
+(kernels.page_window_stats) on every window of the whole doc."""
 
 import numpy as np
 import pandas as pd
@@ -12,6 +13,7 @@ from fasta_windows_spark.functions.udfs import (
     _doc_segments,
     window_stats,
 )
+from fasta_windows_spark import kernels as K
 from fasta_windows_spark.kernels import window_bounds
 
 
@@ -48,34 +50,53 @@ def _mk_docs(spark, texts):
     return spark.createDataFrame(pdf)
 
 
+# page_window_stats key -> window_stats column, where the names differ
+_COLUMN_OF = {"len": "win_len", "di_freq": "k2_vec", "tri_freq": "k3_vec", "tetra_freq": "k4_vec"}
+
+
+def _reference_rows(texts, window, step):
+    """window_stats' columns for every window, from the per-window scalar
+    reference (f32 semantics, the reference's default)."""
+    rows = []
+    for doc_id, text in enumerate(texts):
+        buf = text.encode()
+        for st in K.page_window_stats(text, window, step):
+            row = {"doc_id": doc_id, "w_start": st["start"], "w_end": st["end"]}
+            for i, b in enumerate("acgtn"):
+                row[f"cnt_{b}"] = int(st["mono"][i])
+            row["entropy6"] = K.entropy6(buf[st["start"] : st["end"]])
+            for k, v in st.items():
+                row[_COLUMN_OF.get(k, k)] = v
+            rows.append(row)
+    return pd.DataFrame(rows)
+
+
 @pytest.mark.parametrize("step", [None, 700, 5000])
 def test_oversized_doc_matches_row_path(spark, step):
     rng = np.random.default_rng(7)
     big = "".join(rng.choice(list("ACGTNacgtnxy "), size=OVERSIZE_DOC_BYTES + 12_345))
     small = "ACGT" * 600
-    docs = _mk_docs(spark, [big, small, "", big[: 3 * 4096]])
-    kw = dict(id_cols=["doc_id"], window=2000, step=step, f32=False, with_vectors=True)
+    texts = [big, small, "", big[: 3 * 4096]]
+    docs = _mk_docs(spark, texts)
+    kw = dict(id_cols=["doc_id"], window=2000, step=step, with_vectors=True)
     arrow = (
-        window_stats(docs, use_arrow=True, **kw)
+        window_stats(docs, **kw)
         .toPandas()
         .sort_values(["doc_id", "w_start"])
         .reset_index(drop=True)
     )
-    rows = (
-        window_stats(docs, use_arrow=False, **kw)
-        .toPandas()
-        .sort_values(["doc_id", "w_start"])
-        .reset_index(drop=True)
-    )
-    assert len(arrow) == len(rows) > 0
+    ref = _reference_rows(texts, 2000, step)
+    assert len(arrow) == len(ref) > 0
     for c in arrow.columns:
-        a, b = arrow[c], rows[c]
+        a, b = arrow[c], ref[c]
         if a.dtype == object:  # k-mer vectors
             assert all(np.array_equal(x, y) for x, y in zip(a, b)), c
         elif np.issubdtype(a.dtype, np.floating):
-            an, bn = a.isna(), b.isna()
+            an, bn = a.isna(), b.astype(float).isna()
             assert (an == bn).all(), c
-            assert np.allclose(a[~an], b[~bn], rtol=0, atol=1e-12), c
+            # the kernel's entropies come from a v*log2(v) table, the
+            # reference's from p*log2(p): equal up to float64 rounding
+            assert np.allclose(a[~an], b[~bn].astype(float), rtol=0, atol=1e-9), c
         else:
             assert (a == b).all(), c
 
@@ -86,20 +107,16 @@ def test_oversized_doc_ctw_matches_whole(spark):
     docs = _mk_docs(spark, [big])
     kw = dict(id_cols=["doc_id"], window=1000, f32=False, with_ctw=True)
     arrow = (
-        window_stats(docs, use_arrow=True, **kw)
+        window_stats(docs, **kw)
         .select("doc_id", "w_start", "ctw")
         .toPandas()
         .sort_values(["doc_id", "w_start"])
         .reset_index(drop=True)
     )
-    rows = (
-        window_stats(docs, use_arrow=False, **kw)
-        .select("doc_id", "w_start", "ctw")
-        .toPandas()
-        .sort_values(["doc_id", "w_start"])
-        .reset_index(drop=True)
-    )
-    assert np.allclose(arrow["ctw"], rows["ctw"], rtol=0, atol=1e-10)
+    bounds = window_bounds(len(big), 1000)
+    assert list(arrow["w_start"]) == [s for s, _ in bounds]
+    want = K.ctw_bits_per_base_many([big.encode()[s:e] for s, e in bounds], 6)
+    assert np.allclose(arrow["ctw"], want, rtol=0, atol=1e-10)
 
 
 def test_fields_projection_matches_full(spark):

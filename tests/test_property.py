@@ -15,6 +15,29 @@ any_text = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=126), max_size=200
 )
 windows = st.integers(min_value=1, max_value=64)
+# None = tumbling; a step below the window slides, above it leaves gaps
+steps = st.one_of(st.none(), st.integers(min_value=1, max_value=80))
+
+
+def _assert_kernel_matches_scalar(texts, w, step):
+    """The production kernel over a concatenated buffer == byte_hist /
+    kmer_vector on every window_bounds slice of every doc, in order."""
+    bufs = [t.encode() for t in texts]
+    lengths = np.array([len(b) for b in bufs], dtype=np.int64)
+    buf = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+    doc_idx, starts, ends, hists, kvecs, _ = K.batch_window_stats_concat_sliding(
+        buf, lengths, w, step
+    )
+    i = 0
+    for d, b in enumerate(bufs):
+        for s, e in K.window_bounds(len(b), w, step):
+            assert (doc_idx[i], starts[i], ends[i]) == (d, s, e)
+            win = b[s:e]
+            assert np.array_equal(hists[i], K.byte_hist(win))
+            for k in K.KMER_KS:
+                assert np.array_equal(kvecs[k][i], K.kmer_vector(win, k))
+            i += 1
+    assert i == len(starts)
 
 
 @given(any_text, windows)
@@ -31,18 +54,13 @@ def test_window_bounds_partition_text(text, w):
         pos = e
 
 
-@given(any_text, windows)
-@settings(max_examples=100, deadline=None)
-def test_batch_equals_scalar_path(text, w):
+@given(any_text, windows, steps)
+@settings(max_examples=150, deadline=None)
+def test_batch_equals_scalar_path(text, w, step):
     """The fused multi-window kernel == per-window scalar kernels for any
-    printable input (batch/scalar consistency)."""
-    buf = text.encode()
-    _, starts, ends, hists, kvecs, _ = K.batch_window_stats([text], w)
-    for i, (s, e) in enumerate(zip(starts, ends)):
-        win = buf[s:e]
-        assert np.array_equal(hists[i], K.byte_hist(win))
-        for k in K.KMER_KS:
-            assert np.array_equal(kvecs[k][i], K.kmer_vector(win, k))
+    printable input, tumbling, sliding and gapped (batch/scalar
+    consistency)."""
+    _assert_kernel_matches_scalar([text], w, step)
 
 
 @given(dna_text)
@@ -89,20 +107,12 @@ def test_revcomp_involution_on_acgt(text):
     assert K.reverse_complement(rc) == pure.encode()
 
 
-@given(st.lists(dna_text, max_size=8), windows)
+@given(st.lists(dna_text, max_size=8), windows, steps)
 @settings(max_examples=60, deadline=None)
-def test_concat_entry_point_equals_list_entry_point(texts, w):
-    """batch_window_stats(list) == batch_window_stats_concat(buffer) —
-    the Arrow zero-copy entry point is semantics-preserving."""
-    bufs = [t.encode() for t in texts]
-    lengths = np.array([len(b) for b in bufs], dtype=np.int64)
-    buf = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    a = K.batch_window_stats(texts, w)
-    b = K.batch_window_stats_concat(buf, lengths, w)
-    assert np.array_equal(a[1], b[1]) and np.array_equal(a[2], b[2])
-    assert np.array_equal(a[3], b[3])
-    for k in K.KMER_KS:
-        assert np.array_equal(a[4][k], b[4][k])
+def test_multi_doc_buffer_equals_scalar_path(texts, w, step):
+    """Many docs in one buffer (the Arrow zero-copy layout): windows
+    restart at every doc and no gram crosses a doc boundary."""
+    _assert_kernel_matches_scalar(texts, w, step)
 
 
 # --- pure-Python mirrors of the new operators, property-tested without a

@@ -221,20 +221,31 @@ def test_streaming_kmer_merge_matches_kernel(spark, pages_dir, pages_pdf, tmp_pa
     got = spark.read.parquet(out).toPandas()
     assert len(got) > 0
 
-    # independent check: batch path via the same long rows but batch exec
-    batch = P.spark_pages(spark, pages_pdf)
-    rows = S.kmer_long_rows(batch, ks=(2,))
-    expected = (
-        rows.groupBy(F.window("warc_ts", "1 hour").alias("w"), "host", "k", "idx")
-        .agg(F.sum("cnt").alias("cnt"))
-        .select(F.col("w.start").alias("w_start"), "host", "k", "idx", "cnt")
-        .toPandas()
+    # independent check: the scalar k-mer kernel per page, summed per
+    # (1-hour window, host) in pandas
+    import pandas as pd
+
+    from fasta_windows_spark import kernels as K
+
+    pdf = pages_pdf.assign(
+        w_start=pages_pdf["warc_ts"].dt.floor("1h"),
+        host=pages_pdf["url"].str.split("/").str[2],
     )
+    recs = []
+    for (w_start, host), grp in pdf.groupby(["w_start", "host"]):
+        vec = sum(K.kmer_vector(t or "", 2) for t in grp["text"])
+        recs += [(w_start, host, 2, i, int(c)) for i, c in enumerate(vec) if c]
+    expected = pd.DataFrame(recs, columns=["w_start", "host", "k", "idx", "cnt"])
     g = got.set_index(["w_start", "host", "k", "idx"]).sort_index()
     e = expected.set_index(["w_start", "host", "k", "idx"]).sort_index()
     j = g.join(e, how="left", rsuffix="_b")
     assert j["cnt_b"].notna().all()
     assert (j["cnt"] == j["cnt_b"]).all()
+    # every (window, host) group the stream emitted is complete: no
+    # nonzero k-mer of the expected side is missing from it
+    emitted = set(zip(got["w_start"], got["host"]))
+    want = expected[[wh in emitted for wh in zip(expected["w_start"], expected["host"])]]
+    assert len(want) == len(got)
 
 
 def test_rocksdb_state_store_in_use(spark, pages_dir, tmp_path):
@@ -285,57 +296,6 @@ def test_applyinpandas_with_state_host_agg(spark, pages_dir, pages_pdf, tmp_path
     assert (j["n_pages"] <= j["n_pages_b"]).all()
     assert (j["total_chars"] <= j["total_chars_b"]).all()
     assert sums["n_pages"].sum() <= len(pages_pdf)
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (its state "
-    "server protocol), not installed in this container; the operator is "
-    "kept as the documented forward path and exercised where protobuf "
-    "exists",
-)
-def test_transform_with_state_host_agg(spark, pages_dir, pages_pdf, tmp_path):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor + ValueState +
-    event-time timers) — same per-host incremental aggregation contract as
-    the applyInPandasWithState operator."""
-    from fasta_windows_spark.streaming.stateful import host_state_agg_tws
-
-    stream = S.read_pages_stream(spark, pages_dir, max_files_per_trigger=1)
-    agg = host_state_agg_tws(stream, watermark="1 minute")
-    out = str(tmp_path / "tws_out")
-    q = S.write_exactly_once(agg, out, str(tmp_path / "tws_ck"))
-    q.awaitTermination(180)
-    got = spark.read.parquet(out).toPandas()
-    got = got[got["host"].notna()]
-    assert len(got) > 0
-    assert (
-        got[["cnt_a", "cnt_c", "cnt_g", "cnt_t", "cnt_n"]].sum(axis=1)
-        <= got["total_chars"]
-    ).all()
-    batch = S.with_host(P.spark_pages(spark, pages_pdf))
-    exp = (
-        batch.groupBy("host")
-        .agg(
-            F.count("*").alias("n_pages"),
-            F.sum(F.length("text")).alias("total_chars"),
-        )
-        .toPandas()
-        .set_index("host")
-        .sort_index()
-    )
-    sums = got.groupby("host")[["n_pages", "total_chars"]].sum()
-    j = sums.join(exp, how="left", rsuffix="_b")
-    assert (j["n_pages"] <= j["n_pages_b"]).all()
-    assert (j["total_chars"] <= j["total_chars_b"]).all()
 
 
 def test_streaming_dedup_urls(spark, tmp_path):
@@ -1097,46 +1057,6 @@ def test_cep_absence_checkpoint_resume_no_duplicates(spark, tmp_path):
     assert len(s) > 0
 
 
-def test_positional_window_counts_matches_arrow_kernel(spark, pages_dir):
-    """The pure-JVM positional-window count path (whole-stage codegen, no
-    Arrow/Python crossing — the scaling bench's stats mode) must agree
-    row-for-row with the Arrow kernel path on the same pages, including
-    the truncated final window, case folding, and N handling. Also pins
-    edge cases: empty text yields no windows; text shorter than the
-    window yields exactly one truncated window."""
-    from fasta_windows_spark.functions.udfs import window_stats
-
-    pages = S.with_host(spark.read.parquet(pages_dir))
-    extra = spark.createDataFrame(
-        [
-            ("http://edge.example/a", "h-edge", ""),          # no windows
-            ("http://edge.example/b", "h-edge", "acgTN"),     # one short window
-            ("http://edge.example/c", "h-edge", "A" * 1000),  # exact boundary
-            ("http://edge.example/d", "h-edge", "Cg" * 501),  # 1002 chars
-        ],
-        "url STRING, host STRING, text STRING",
-    ).withColumn("warc_ts", F.lit("2024-01-01 00:00:00").cast("timestamp"))
-    pages = pages.select("url", "host", "warc_ts", "text").unionByName(extra)
-
-    jvm = S.positional_window_counts(
-        pages, window=1000, id_cols=("url",)
-    )
-    arrow = window_stats(
-        pages, window=1000, id_cols=["url"], f32=False,
-        fields=["win_len", "cnt_c", "cnt_g"],
-    )
-    a = {tuple(r) for r in jvm.select(
-        "url", "w_start", "w_end", "win_len", "cnt_c", "cnt_g").collect()}
-    b = {tuple(r) for r in arrow.select(
-        "url", "w_start", "w_end", "win_len", "cnt_c", "cnt_g").collect()}
-    assert a == b and len(a) > 0
-
-    # the plan must be pure JVM: no Arrow/Python eval nodes
-    plan = jvm._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "MapInArrow" not in plan and "MapInPandas" not in plan
-
-
 def test_streaming_bpe_counts_match_batch(spark, pages_dir, tmp_path):
     """foreachBatch operator reuse: streaming per-page BPE token counts
     must equal the batch operator over the same pages, regardless of how
@@ -1163,38 +1083,31 @@ def test_streaming_bpe_counts_match_batch(spark, pages_dir, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_positional_window_counts_unicode_semantics(spark):
-    """The unit-of-length boundary, pinned: the JVM path (and every SQL
-    oracle) windows by CHARACTERS; the Arrow kernel windows by UTF-8
-    BYTES (the reference's u8 contract). They coincide exactly on ASCII;
-    on multi-byte text they differ BY DESIGN — this test documents the
-    divergence so it can never be mistaken for a bug (or silently
-    broken)."""
-    import duckdb
-
+def test_window_stats_counts_utf8_bytes(spark):
+    """The unit of length, pinned end to end: window_stats windows text by
+    UTF-8 BYTES (the reference's u8 contract, seq_statsu8.rs), not by
+    characters. Multi-byte text makes the two differ: 360 characters
+    here are 420 bytes, so W=100 gives 5 windows, not 4."""
     from fasta_windows_spark import kernels as K
+    from fasta_windows_spark.functions.udfs import window_stats
 
-    text = "héllo wörld " * 30  # 360 chars, 420 utf-8 bytes
-    df = spark.createDataFrame(
-        [("u1", text)], "url STRING, text STRING"
-    )
-    jvm = (
-        S.positional_window_counts(df, window=100, id_cols=("url",))
+    text = "héllo wörld " * 30
+    df = spark.createDataFrame([("u1", text)], "url STRING, text STRING")
+    got = (
+        window_stats(df, window=100, id_cols=["url"], with_vectors=True)
         .orderBy("w_start")
         .collect()
     )
-    # char semantics: 4 windows of 100/100/100/60 chars
-    assert [(r.w_start, r.win_len) for r in jvm] == [
-        (0, 100), (100, 100), (200, 100), (300, 60)
-    ]
-    # DuckDB (the oracle engine) agrees char-for-char
-    want = duckdb.sql(
-        f"SELECT length('{text}')::BIGINT"
-    ).fetchone()[0]
-    assert sum(r.win_len for r in jvm) == want == 360
-    # the kernel windows the same text by BYTES: 5 windows over 420 bytes
-    bounds = K.window_bounds(len(text.encode("utf-8")), 100)
-    assert [e - s for s, e in bounds] == [100, 100, 100, 100, 20]
+    assert [r.win_len for r in got] == [100, 100, 100, 100, 20]
+    want = K.page_window_stats(text, 100)
+    assert [(r.w_start, r.w_end) for r in got] == [(w["start"], w["end"]) for w in want]
+    for r, w in zip(got, want):
+        assert r.win_len == w["len"]
+        assert [r.cnt_a, r.cnt_c, r.cnt_g, r.cnt_t, r.cnt_n] == list(w["mono"])
+        assert list(r.k2_vec) == list(w["di_freq"])
+        assert list(r.k4_vec) == list(w["tetra_freq"])
+        for c in ("gc_prop", "prop_masked", "shannon_entropy", "dinuc_shannon", "kt0"):
+            assert getattr(r, c) == pytest.approx(w[c], abs=1e-9), c
 
 
 def test_streaming_token_sketch_equals_batch_cms(spark, pages_dir, pages_pdf, tmp_path):
