@@ -128,7 +128,9 @@ def streaming_windows_per_sec(spark, scratch: str, n_pages: int = 24000) -> dict
     stream = S.with_host(S.read_pages_stream(spark, src))
     ws = window_stats(
         stream, window=1000, id_cols=["host", "warc_ts"], f32=False,
-        fields=["win_len", "cnt_g", "cnt_c"],  # only what the agg consumes
+        # only what the agg consumes; counts alone skip the k-mer tables
+        # and the finisher
+        fields=["win_len", "cnt_g", "cnt_c"],
     )
     agg = (
         ws.withWatermark("warc_ts", "10 minutes")

@@ -77,7 +77,8 @@ if mode == "entropy":
     )
 else:
     # stats mode: the Arrow window kernel with fields= projection pushdown,
-    # so only the 3 consumed scalars cross Arrow IPC back from Python
+    # so only the 3 consumed counts are computed (byte histograms, no k-mer
+    # tables or finisher) and cross Arrow IPC back from Python
     ws = window_stats(pages, window=1000, id_cols=["host", "warc_ts"], f32=False,
                       fields=["win_len", "cnt_g", "cnt_c"])
     agg = (

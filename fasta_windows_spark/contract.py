@@ -117,7 +117,9 @@ FROM win2
 )
 def doc_windows_mononuc(spark, sf_dir):
     """A2/mononuc TSV analog (fw.rs:310, seq_statsu8.rs:113)."""
-    return _ws(spark, sf_dir).select(
+    return _ws(
+        spark, sf_dir, fields=["cnt_a", "cnt_c", "cnt_g", "cnt_t", "cnt_n"]
+    ).select(
         "doc_id", "w_start", "w_end", "cnt_a", "cnt_c", "cnt_g", "cnt_t", "cnt_n"
     )
 
@@ -149,7 +151,9 @@ FROM counts
 def doc_windows_composition(spark, sf_dir):
     """A3-A5: GC proportion (with S/W ambiguity codes, seq_statsu8.rs:108-109),
     skews (NULL on 0/0), per-base proportions."""
-    ws = _ws(spark, sf_dir)
+    ws = _ws(spark, sf_dir, fields=[
+        "gc_prop", "gc_skew", "at_skew", "prop_g", "prop_c", "prop_a", "prop_t", "prop_n",
+    ])
     return ws.select(
         "doc_id",
         "w_start",
@@ -194,7 +198,7 @@ FROM six2
 )
 def doc_windows_entropy6(spark, sf_dir):
     """A7: 6-bin entropy-mode Shannon entropy (entropy.rs:49-74)."""
-    return _ws(spark, sf_dir).select(
+    return _ws(spark, sf_dir, fields=["entropy6"]).select(
         "doc_id", "w_start", "w_end", _r6("entropy6").alias("entropy6")
     )
 
@@ -221,7 +225,7 @@ FROM hist GROUP BY doc_id, w_start, w_end
 def doc_windows_entropy256(spark, sf_dir):
     """A6: 256-bin byte entropy, acgtn folded, exotic bytes distinct
     (seq_statsu8.rs:90-106)."""
-    return _ws(spark, sf_dir).select(
+    return _ws(spark, sf_dir, fields=["shannon_entropy"]).select(
         "doc_id", "w_start", "w_end", _r6("shannon_entropy").alias("shannon_entropy")
     )
 
@@ -483,7 +487,9 @@ def doc_windows_diversity(spark, sf_dir):
     """A9+A10: k-mer Shannon diversity (kmeru8.rs:113-123; denominator =
     counted grams, N-containing grams excluded) and CpG proportion
     (di vector index 6 / window length, fw.rs:120)."""
-    return _ws(spark, sf_dir).select(
+    return _ws(spark, sf_dir, fields=[
+        "dinuc_shannon", "trinuc_shannon", "tetranuc_shannon", "cpg_prop",
+    ]).select(
         "doc_id",
         "w_start",
         "w_end",
@@ -516,7 +522,7 @@ FROM k
 def doc_windows_kt0(spark, sf_dir):
     """A11: zero-order Krichevsky-Trofimov code length, bits/base
     (kmeru8.rs:127-159) via the telescoped lgamma closed form."""
-    return _ws(spark, sf_dir).select(
+    return _ws(spark, sf_dir, fields=["kt0"]).select(
         "doc_id", "w_start", "w_end", _r6("kt0").alias("kt0")
     )
 
@@ -689,7 +695,7 @@ FROM six2
 def doc_windows_sliding(spark, sf_dir):
     """Sliding positional windows W=100 step=50 (the -w/-s generalization,
     SURVEY.md §2.7): per-window 6-bin entropy."""
-    return _ws(spark, sf_dir, step=50).select(
+    return _ws(spark, sf_dir, step=50, fields=["entropy6"]).select(
         "doc_id", "w_start", "w_end", _r6("entropy6").alias("entropy6")
     )
 
@@ -731,7 +737,10 @@ def doc_source_ngram_agg(spark, sf_dir):
     merged per key (source = host analog) by JVM-side partial+final sums, then
     a closed-form entropy finisher — merge is associative vector addition
     (SURVEY.md §4 custom item 2), finisher is pure column arithmetic."""
-    ws = _ws(spark, sf_dir, id_cols=["doc_id", "source"])
+    ws = _ws(
+        spark, sf_dir, id_cols=["doc_id", "source"],
+        fields=["win_len", "cnt_a", "cnt_c", "cnt_g", "cnt_t", "cnt_n"],
+    )
     agg = ws.groupBy("source").agg(
         F.sum("win_len").alias("total_len"),
         F.sum("cnt_a").alias("cnt_a"),
@@ -791,7 +800,7 @@ def doc_windows_entropy_outliers(spark, sf_dir):
     # the window-stats kernel subplan feeds three consumers (median, MAD,
     # final projection) — stage it once instead of running the kernel 3x
     e = stage_scoped(
-        _ws(spark, sf_dir).select(
+        _ws(spark, sf_dir, fields=["entropy6"]).select(
             "doc_id", "w_start", "w_end", _r6("entropy6").alias("entropy6")
         ),
         "entropy_outliers_exact",
@@ -847,7 +856,9 @@ def doc_windows_cumskew(spark, sf_dir):
     (contrast with a global ORDER BY — there is none here)."""
     from pyspark.sql import Window as W_
 
-    c = _ws(spark, sf_dir).select("doc_id", "w_start", "cnt_g", "cnt_c")
+    c = _ws(spark, sf_dir, fields=["cnt_g", "cnt_c"]).select(
+        "doc_id", "w_start", "cnt_g", "cnt_c"
+    )
     skew = (
         F.when(F.col("cnt_g") + F.col("cnt_c") == 0, F.lit(0.0))
         .otherwise(
@@ -879,7 +890,7 @@ def doc_windows_entropy_outliers_approx(spark, sf_dir):
     from .staging import stage_scoped
 
     e = stage_scoped(
-        _ws(spark, sf_dir).select(
+        _ws(spark, sf_dir, fields=["entropy6"]).select(
             "doc_id", "w_start", "w_end", _r6("entropy6").alias("entropy6")
         ),
         "entropy_outliers_approx",

@@ -2,8 +2,9 @@
 
 The central operator is :func:`window_stats` — the Spark re-expression of the
 reference's whole per-window pipeline (fw.rs:85-128): explode each document's
-text into positional windows and compute every per-window statistic, in ONE
-``mapInArrow`` pass with zero per-row Python (BASELINE.json input_hint).
+text into positional windows and compute the per-window statistics asked
+for (``fields=``, default all), in ONE ``mapInArrow`` pass with zero per-row
+Python (BASELINE.json input_hint).
 
 Architecture note (100 TB): positional windows live entirely inside one row,
 so this stage is a narrow transformation — no shuffle, no state; it scales
@@ -23,7 +24,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.types as T
 
-from ..kernels import KMER_KS, batch_window_stats_concat_sliding, stats_table
+from ..kernels import (
+    COUNT_KEYS,
+    KMER_KS,
+    KMER_STAT_K,
+    batch_window_stats_concat_sliding,
+    hist_counts,
+    stats_table,
+)
 
 # scalar stats emitted per window (names are the queries()/oracle contract)
 SCALAR_FIELDS = [
@@ -209,8 +217,12 @@ def window_stats(
     ``fields``: emit only these scalar stat columns (default all). This is
     projection pushdown through the Python boundary — Catalyst cannot prune
     columns INSIDE a mapInArrow, so a downstream agg that needs 3 of the 22
-    scalars would otherwise pay Arrow IPC for all 22 on every window. The
-    kernel still computes its fused tables; only finisher emission is cut.
+    scalars would otherwise pay Arrow IPC for all 22 on every window. It
+    also decides what is computed: the kernel builds only the k-mer orders
+    the requested fields read (all of them with ``with_vectors``), counts
+    alone (``win_len``/``cnt_*``, or no field) come straight from the byte
+    histograms with no finisher, and the finisher computes only the
+    requested statistics.
 
     The text column's Arrow layout (one concatenated UTF-8 buffer +
     offsets) feeds the kernel ZERO-COPY, skipping pandas/Python-string
@@ -225,30 +237,42 @@ def window_stats(
     id_fields = [(c, in_df.schema[c].dataType) for c in id_cols]
     schema = window_stats_schema(id_fields, with_ctw, with_vectors, fields)
     emit_fields = _scalar_fields(fields)
+    stat_keys = [_STAT_KEY.get(n, n) for n, _ in emit_fields]
+    # the k-mer orders to build: what the vectors or requested stats read
+    ks = KMER_KS if with_vectors else tuple(
+        sorted({KMER_STAT_K[k] for k in stat_keys if k in KMER_STAT_K})
+    )
+    counts_only = COUNT_KEYS.issuperset(stat_keys)
 
-    # rows per output RecordBatch: Arrow list offsets are int32, so a slice
-    # must keep n * 4^kmax < 2^31 (a single huge doc at step=1 can produce
-    # tens of millions of windows in one kernel call); 2M also bounds the
-    # finisher's transient matrices
+    # rows per output RecordBatch: 2M bounds the finisher's transient
+    # matrices; with vectors, Arrow list offsets are int32, so a slice must
+    # also keep n * 4^kmax < 2^31 (a single huge doc at step=1 can produce
+    # tens of millions of windows in one kernel call)
     EMIT_MAX_WINDOWS = 2_000_000
+    if with_vectors:
+        EMIT_MAX_WINDOWS = min(EMIT_MAX_WINDOWS, (2**31 - 1) // 4 ** max(ks))
 
     def emit(full_batch, parts):
         # concatenate per-chunk kernel outputs, run the vectorized finisher
-        # ONCE over each bounded row-slice, build Arrow arrays once per
-        # slice — per-chunk Python/Arrow overhead stays amortized while the
-        # kernel itself runs on L2-resident chunks
+        # (or, for counts alone, the histogram column sums) ONCE over each
+        # bounded row-slice, build Arrow arrays once per slice — per-chunk
+        # Python/Arrow overhead stays amortized while the kernel itself
+        # runs on L2-resident chunks
         doc_idx = np.concatenate([r0 + p[0] for r0, p in parts])
         starts = np.concatenate([p[1] for _, p in parts])
         ends = np.concatenate([p[2] for _, p in parts])
         hists = np.vstack([p[3] for _, p in parts])
-        kvecs = {k: np.vstack([p[4][k] for _, p in parts]) for k in KMER_KS}
+        kvecs = {k: np.vstack([p[4][k] for _, p in parts]) for k in ks}
         ctw = (
             np.concatenate([p[5] for _, p in parts]) if with_ctw else None
         )
         for s0 in range(0, len(starts), EMIT_MAX_WINDOWS):
             s1 = min(s0 + EMIT_MAX_WINDOWS, len(starts))
-            sl_kvecs = {k: kvecs[k][s0:s1] for k in KMER_KS}
-            st = stats_table(hists[s0:s1], sl_kvecs, masked=masked, f32=f32)
+            sl_kvecs = {k: kvecs[k][s0:s1] for k in ks}
+            if counts_only:
+                st = hist_counts(hists[s0:s1], masked, stat_keys)
+            else:
+                st = stats_table(hists[s0:s1], sl_kvecs, masked, f32, keys=stat_keys)
             take = pa.array(doc_idx[s0:s1], type=pa.int64())
             arrays, names = [], []
             for c in id_cols:
@@ -278,7 +302,7 @@ def window_stats(
                 names.append("ctw")
             if with_vectors:
                 n = s1 - s0
-                for k in KMER_KS:
+                for k in ks:
                     flat = pa.array(
                         sl_kvecs[k].reshape(-1).astype(np.int32), pa.int32()
                     )
@@ -301,7 +325,7 @@ def window_stats(
             starts[sl] + base,
             ends[sl] + base,
             hists[sl],
-            {k: kvecs[k][sl] for k in KMER_KS},
+            {k: kvecs[k][sl] for k in ks},
             ctw[sl] if with_ctw else None,
         )
 
@@ -334,6 +358,7 @@ def window_stats(
                             window,
                             step,
                             with_ctw=with_ctw,
+                            ks=ks,
                         )
                         if len(res[1]) == 0:
                             continue
@@ -355,6 +380,7 @@ def window_stats(
                         window,
                         step,
                         with_ctw=with_ctw,
+                        ks=ks,
                     )
                     res = trim_segment(res, owned, b0)
                     if len(res[1]) == 0:

@@ -585,7 +585,10 @@ def _kgram_codes(buf: np.ndarray, ks=KMER_KS) -> dict:
     k indices are its high bits (k2(i) = k4(i) >> 4, k3(i) = k4(i) >> 2),
     so each extra k costs one shift, not a fresh roll. Phase/window-agnostic
     (window membership is applied by the caller), so sliding decompositions
-    compute this ONCE and reuse it across phases."""
+    compute this ONCE and reuse it across phases. ``ks=()`` -> {} (a
+    counts-only caller needs no grams)."""
+    if not ks:
+        return {}
     code = NUC_CODE[buf]
     valid = code != 255
     c32 = code.astype(np.int32)
@@ -645,10 +648,11 @@ def _concat_phase(buf, lengths, window, offset, period, with_ctw, ks, kcodes=Non
     Python; the columnar analog of the reference's rayon record x k
     parallelism (fw.rs:67, kmeru8.rs:35). `kcodes` = precomputed
     _kgram_codes(buf, ks) — phase-invariant, so the sliding entry point
-    computes it once for all K phases.
+    computes it once for all K phases. `ks` is any subset of KMER_KS,
+    ``()`` included (byte histograms only).
 
-    Returns (doc_idx, starts, ends, hists[nwin,256], kvecs{k: [nwin,4^k]},
-    ctw[nwin] or None)."""
+    Returns (doc_idx, starts, ends, hists[nwin,256], kvecs{k: [nwin,4^k]}
+    for k in ks, ctw[nwin] or None)."""
     buf = np.asarray(buf, dtype=np.uint8)
     lengths = np.asarray(lengths, dtype=np.int64)
     n_docs = len(lengths)
@@ -711,7 +715,9 @@ def _concat_phase(buf, lengths, window, offset, period, with_ctw, ks, kcodes=Non
     # so doc-crossing grams fail the same test); rejected grams go to one
     # trash bin — a single where-pass instead of two boolean gathers
     kvecs = {}
-    for k, (idx, ok) in (kcodes or _kgram_codes(buf, ks)).items():
+    if kcodes is None:
+        kcodes = _kgram_codes(buf, ks)
+    for k, (idx, ok) in kcodes.items():
         m = len(idx)
         if m == 0:
             kvecs[k] = np.zeros((total_wins, 4**k), dtype=np.int64)
@@ -750,7 +756,8 @@ def batch_window_stats_concat_sliding(
     non-overlapping passes (phase g covers starts g*step + j*K*step),
     merged and re-sorted. Total cost is K kernel passes — proportional to
     the output volume, i.e. the inherent cost of overlap. Handles
-    step > window (gapped sampling windows) too."""
+    step > window (gapped sampling windows) too. Only the k-mer orders in
+    `ks` are built; ``ks=()`` leaves the byte histograms alone."""
     if step is None or step == window:
         return _concat_phase(buf, lengths, window, 0, window, with_ctw, ks)
     K = max(1, -(-window // step))  # ceil
@@ -816,98 +823,132 @@ def _entropy_rows(count_matrix: np.ndarray) -> np.ndarray:
     return -np.bincount(rows, weights=contrib, minlength=nrows) + 0.0
 
 
-def stats_table(hists: np.ndarray, kvecs: dict, masked: bool = False, f32: bool = True) -> dict:
-    """Vectorized-across-windows finisher: every scalar statistic for N windows
+# stats_table keys, in emission order; the count keys come from hist_counts
+STATS_TABLE_KEYS = (
+    "len", "a", "c", "g", "t", "n", "masked_counts",
+    "gc_prop", "gc_skew", "at_skew",
+    "prop_g", "prop_c", "prop_a", "prop_t", "prop_n", "prop_masked",
+    "shannon_entropy", "entropy6",
+    "dinuc_shannon", "trinuc_shannon", "tetranuc_shannon", "cpg_prop",
+    "kt0",
+)
+COUNT_KEYS = frozenset({"len", "a", "c", "g", "t", "n", "masked_counts"})
+# proportions/skews over the counts (cpg_prop also divides by "len")
+_RATIO_KEYS = frozenset({
+    "gc_prop", "gc_skew", "at_skew", "cpg_prop",
+    "prop_g", "prop_c", "prop_a", "prop_t", "prop_n", "prop_masked",
+})
+# the k-mer order each k-mer statistic reads (kmeru8.rs:113-123, fw.rs:120)
+KMER_STAT_K = {"dinuc_shannon": 2, "cpg_prop": 2, "trinuc_shannon": 3, "tetranuc_shannon": 4}
+
+
+def hist_counts(hists: np.ndarray, masked: bool, keys) -> dict:
+    """Count columns for N windows from their (N,256) byte histograms:
+    "len" (every byte), "masked_counts", or a lowercase letter for that
+    base's count. The one place case folds (seq_statsu8.rs:50-85): masked
+    counts only the uppercase byte and nothing as masked; unmasked adds
+    the lowercase byte and counts lowercase IUPAC bases as masked."""
+    h = np.asarray(hists, dtype=np.int64)
+    out = {}
+    for key in keys:
+        if key == "len":
+            out[key] = h.sum(axis=1)
+        elif key == "masked_counts":
+            out[key] = (
+                np.zeros(len(h), dtype=np.int64) if masked else h[:, _MASKED_BYTES].sum(axis=1)
+            )
+        elif masked:
+            out[key] = h[:, ord(key.upper())]
+        else:
+            out[key] = h[:, ord(key.upper())] + h[:, ord(key)]
+    return out
+
+
+def stats_table(
+    hists: np.ndarray, kvecs: dict, masked: bool = False, f32: bool = True, keys=None
+) -> dict:
+    """Vectorized-across-windows finisher: scalar statistics for N windows
     at once from the (N,256) byte-histogram matrix and (N,4^k) k-mer matrices.
 
+    ``keys`` (default all of STATS_TABLE_KEYS) picks what is computed;
+    `kvecs` need only hold the orders those keys read (KMER_STAT_K).
     ``f32=True`` reproduces the reference's f32 division semantics
     (seq_statsu8.rs:108-120, 0/0 -> NaN); f32=False computes in float64 for
     oracle-comparison paths. Returns dict of 1-D arrays keyed like
     scalar_stats_from_vectors.
     """
+    want = set(STATS_TABLE_KEYS if keys is None else keys)
+    unknown = want - set(STATS_TABLE_KEYS)
+    if unknown:
+        raise ValueError(f"unknown stats_table keys: {sorted(unknown)}")
     h = np.asarray(hists, dtype=np.int64)
     n = h.shape[0]
-    lens = h.sum(axis=1)
     ftype = np.float32 if f32 else np.float64
+    out = {}
 
-    def c(ch: str) -> np.ndarray:
-        return h[:, ord(ch)]
+    if want & (COUNT_KEYS | _RATIO_KEYS):
+        # counts and the proportions/skews over them
+        out = hist_counts(h, masked, ("len", "a", "c", "g", "t", "n", "w", "s", "masked_counts"))
+        lens, g, cc, a, t = out["len"], out["g"], out["c"], out["a"], out["t"]
+        s, w, masked_counts = out.pop("s"), out.pop("w"), out["masked_counts"]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            def div(num, den):
+                return (num.astype(ftype) / den.astype(ftype)).astype(np.float64)
 
-    if masked:
-        g, cc, a, t, nn = c("G"), c("C"), c("A"), c("T"), c("N")
-        masked_counts = np.zeros(n, dtype=np.int64)
-        w, s = c("W"), c("S")
-    else:
-        g, cc = c("G") + c("g"), c("C") + c("c")
-        a, t = c("A") + c("a"), c("T") + c("t")
-        nn = c("N") + c("n")
-        masked_counts = h[:, _MASKED_BYTES].sum(axis=1)
-        w, s = c("W") + c("w"), c("S") + c("s")
+            out.update({
+                "gc_prop": div(g + cc + s, g + cc + s + a + t + w),
+                "gc_skew": div(g - cc, g + cc),
+                "at_skew": div(a - t, a + t),
+                "prop_g": div(g, lens),
+                "prop_c": div(cc, lens),
+                "prop_a": div(a, lens),
+                "prop_t": div(t, lens),
+                "prop_n": div(out["n"], lens),
+                "prop_masked": div(masked_counts, lens),
+            })
+            if "cpg_prop" in want:
+                out["cpg_prop"] = div(np.asarray(kvecs[2])[:, 6], lens)
 
-    with np.errstate(divide="ignore", invalid="ignore"):
-        def div(num, den):
-            return (num.astype(ftype) / den.astype(ftype)).astype(np.float64)
+    if "shannon_entropy" in want:
+        # 256-bin entropy with acgtn folded up (seq_statsu8.rs:90-106):
+        # fold = 5 column adds on a copy, then the hybrid entropy reducer
+        folded = h.copy()
+        for lo, up in _FOLD_PAIRS:
+            folded[:, up] += folded[:, lo]
+            folded[:, lo] = 0
+        out["shannon_entropy"] = _entropy_rows(folded)
 
-        flens = lens.astype(ftype)
-        out = {
-            "len": lens,
-            "a": a, "c": cc, "g": g, "t": t, "n": nn,
-            "masked_counts": masked_counts,
-            "gc_prop": div(g + cc + s, g + cc + s + a + t + w),
-            "gc_skew": div(g - cc, g + cc),
-            "at_skew": div(a - t, a + t),
-            "prop_g": (g.astype(ftype) / flens).astype(np.float64),
-            "prop_c": (cc.astype(ftype) / flens).astype(np.float64),
-            "prop_a": (a.astype(ftype) / flens).astype(np.float64),
-            "prop_t": (t.astype(ftype) / flens).astype(np.float64),
-            "prop_n": (nn.astype(ftype) / flens).astype(np.float64),
-            "prop_masked": (masked_counts.astype(ftype) / flens).astype(np.float64),
-        }
+    if "entropy6" in want:
+        # 6-bin entropy (entropy mode, entropy.rs:49-74): fold 256 bins into
+        # 6 via per-class column-slice sums (one pass over h, no ufunc.at)
+        six = np.zeros((n, 6), dtype=np.int64)
+        if masked:
+            for i, b in enumerate(b"ACGTN"):
+                six[:, i] = h[:, b]
+        else:
+            for cls in range(6):
+                cols_cls = np.flatnonzero(SIX_BIN == cls)
+                six[:, cls] = h[:, cols_cls].sum(axis=1)
+        out["entropy6"] = _entropy_rows(six)
 
-    # 256-bin entropy with acgtn folded up (seq_statsu8.rs:90-106):
-    # fold = 5 column adds on a copy, then the hybrid entropy reducer
-    folded = h.copy()
-    for lo, up in _FOLD_PAIRS:
-        folded[:, up] += folded[:, lo]
-        folded[:, lo] = 0
-    out["shannon_entropy"] = _entropy_rows(folded)
+    # k-mer diversities (kmeru8.rs:113-123)
+    for name in ("dinuc_shannon", "trinuc_shannon", "tetranuc_shannon"):
+        if name in want:
+            out[name] = _entropy_rows(kvecs[KMER_STAT_K[name]])
 
-    # 6-bin entropy (entropy mode, entropy.rs:49-74): fold 256 bins into 6
-    # via per-class column-slice sums (one pass over h, no ufunc.at)
-    six = np.zeros((n, 6), dtype=np.int64)
-    if masked:
-        for i, b in enumerate(b"ACGTN"):
-            six[:, i] = h[:, b]
-    else:
-        for cls in range(6):
-            cols_cls = np.flatnonzero(SIX_BIN == cls)
-            six[:, cls] = h[:, cols_cls].sum(axis=1)
-    out["entropy6"] = _entropy_rows(six)
-
-    # k-mer diversities + CpG (kmeru8.rs:113-123, fw.rs:120)
-    for k, name in ((2, "dinuc_shannon"), (3, "trinuc_shannon"), (4, "tetranuc_shannon")):
-        out[name] = _entropy_rows(kvecs[k])
-    with np.errstate(divide="ignore", invalid="ignore"):
-        out["cpg_prop"] = (
-            np.asarray(kvecs[2])[:, 6].astype(ftype) / lens.astype(ftype)
-        ).astype(np.float64)
-
-    # KT0 closed form via an lgamma lookup table over 0..max_len (A11).
-    # KT0/CTW always case-fold regardless of the masked flag
-    # (kmeru8.rs:128-137 nuc_to_sym accepts upper and lower).
-    acgt = np.stack(
-        [c("A") + c("a"), c("C") + c("c"), c("G") + c("g"), c("T") + c("t")],
-        axis=1,
-    )
-    n_eff = acgt.sum(axis=1)
-    max_n = int(n_eff.max()) if n else 0
-    lg_half = np.array([math.lgamma(i + 0.5) for i in range(max_n + 1)])
-    lg_int = np.array([math.lgamma(i + 2.0) for i in range(max_n + 1)])
-    log_p = lg_half[acgt].sum(axis=1) - 4 * _LGAMMA_HALF + _LGAMMA_TWO - lg_int[n_eff]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        kt0 = np.where(n_eff > 0, -(log_p / _LN2) / np.maximum(n_eff, 1), 0.0)
-    out["kt0"] = kt0
-    return out
+    if "kt0" in want:
+        # KT0 closed form via an lgamma lookup table over 0..max_len (A11).
+        # KT0/CTW always case-fold regardless of the masked flag
+        # (kmeru8.rs:128-137 nuc_to_sym accepts upper and lower).
+        acgt = np.stack(list(hist_counts(h, False, "acgt").values()), axis=1)
+        n_eff = acgt.sum(axis=1)
+        max_n = int(n_eff.max()) if n else 0
+        lg_half = np.array([math.lgamma(i + 0.5) for i in range(max_n + 1)])
+        lg_int = np.array([math.lgamma(i + 2.0) for i in range(max_n + 1)])
+        log_p = lg_half[acgt].sum(axis=1) - 4 * _LGAMMA_HALF + _LGAMMA_TWO - lg_int[n_eff]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            out["kt0"] = np.where(n_eff > 0, -(log_p / _LN2) / np.maximum(n_eff, 1), 0.0)
+    return {k: out[k] for k in STATS_TABLE_KEYS if k in want}
 
 
 def page_window_stats(text, window: int, step: int | None = None, masked: bool = False, with_ctw: bool = False):

@@ -338,6 +338,50 @@ def test_sliding_concat_matches_reference_path():
         _assert_matches_scalar(texts, W, s, with_ctw)
 
 
+@pytest.mark.parametrize("step", [None, 3, 13], ids=["tumbling", "sliding", "gapped"])
+@pytest.mark.parametrize(
+    "ks", [(), (2,), (3,), (4,), (2, 3), (2, 4), (3, 4), (4, 2, 3)], ids=repr
+)
+def test_kmer_order_subset_matches_full(ks, step):
+    """The kernel builds only the k-mer orders asked for (``ks=()``: byte
+    histograms alone); every array it returns equals the full call's."""
+    rng = np.random.default_rng(11)
+    alpha = np.frombuffer(b"ACGTNacgtn\xc3\xa9 ", dtype=np.uint8)
+    texts = [alpha[rng.integers(0, len(alpha), n)].tobytes() for n in (157, 0, 3, 64, 90)]
+    lengths = np.array([len(t) for t in texts], dtype=np.int64)
+    buf = np.frombuffer(b"".join(texts), dtype=np.uint8)
+    full = K.batch_window_stats_concat_sliding(buf, lengths, 10, step)
+    part = K.batch_window_stats_concat_sliding(buf, lengths, 10, step, ks=ks)
+    for a, b in zip(full[:4], part[:4]):
+        assert np.array_equal(a, b)
+    assert sorted(part[4]) == sorted(ks)
+    for k in ks:
+        assert np.array_equal(part[4][k], full[4][k]), k
+
+
+@pytest.mark.parametrize("masked", [False, True])
+def test_stats_table_keys_match_full(masked):
+    """stats_table(keys=[key]) computes that one statistic from only the
+    k-mer order it reads, equal to the full table's column; hist_counts
+    gives the same count columns."""
+    texts = [b"ACGTacgtNNnnWSws" * 20, b"gggCCCaaaTTTxx" * 9, b"", b"AC"]
+    lengths = np.array([len(t) for t in texts], dtype=np.int64)
+    buf = np.frombuffer(b"".join(texts), dtype=np.uint8)
+    _, _, _, hists, kvecs, _ = K.batch_window_stats_concat_sliding(buf, lengths, 50, 20)
+    full = K.stats_table(hists, kvecs, masked=masked, f32=True)
+    assert list(full) == list(K.STATS_TABLE_KEYS)
+    for key in K.STATS_TABLE_KEYS:
+        only = {K.KMER_STAT_K[key]} if key in K.KMER_STAT_K else set()
+        one = K.stats_table(hists, {k: kvecs[k] for k in only}, masked, True, keys=[key])
+        assert list(one) == [key]
+        assert np.array_equal(one[key], full[key], equal_nan=True), key
+    counts = K.hist_counts(hists, masked, sorted(K.COUNT_KEYS))
+    for key, col in counts.items():
+        assert np.array_equal(col, full[key]), key
+    with pytest.raises(ValueError):
+        K.stats_table(hists, kvecs, keys=["nope"])
+
+
 def test_dinuc_oe_hand_computed(spark):
     """CpG O/E on a hand-built window: 'acgcg' + padding inside one
     100-char window — obs(CG)=2, c(C)=2, c(G)=2, total=5 (pad with 'n'

@@ -119,28 +119,67 @@ def test_oversized_doc_ctw_matches_whole(spark):
     assert np.allclose(arrow["ctw"], want, rtol=0, atol=1e-10)
 
 
+# (fields, masked, with_vectors): counts alone, one k-mer order, a mix of
+# finisher families, vectors without scalars, and everything
+_FIELD_SETS = [
+    (["win_len", "cnt_g", "cnt_c"], False, False),
+    (["cnt_a", "cnt_t", "cnt_n"], True, False),
+    (["cpg_prop"], False, False),
+    (["trinuc_shannon"], False, False),
+    (["gc_prop", "kt0", "entropy6"], False, False),
+    ([], False, True),
+    (None, False, False),
+]
+
+
 def test_fields_projection_matches_full(spark):
+    """fields= decides what is computed; every subset equals the same
+    columns of the full call, on the grouped-chunk and the oversized-doc
+    segment paths, tumbling and sliding."""
     from fasta_windows_spark.functions.udfs import _scalar_fields
 
-    docs = _mk_docs(spark, ["ACGTacgtn " * 500, "gggcccAAA" * 200])
-    kw = dict(id_cols=["doc_id"], window=300, f32=False)
-    full = (
-        window_stats(docs, **kw)
-        .select("doc_id", "w_start", "win_len", "cnt_g", "gc_prop")
-        .toPandas()
-        .sort_values(["doc_id", "w_start"])
-        .reset_index(drop=True)
-    )
-    trimmed_df = window_stats(docs, fields=["win_len", "cnt_g", "gc_prop"], **kw)
-    assert [f.name for f in trimmed_df.schema.fields] == [
-        "doc_id", "w_start", "w_end", "win_len", "cnt_g", "gc_prop",
+    rng = np.random.default_rng(5)
+    big = "".join(rng.choice(list("ACGTacgtNNNNé "), size=OVERSIZE_DOC_BYTES + 7_777))
+    texts = [
+        big,
+        ("ACGTacgtn " * 50 + "N" * 120) * 10,
+        "héllo wörld GGCCaattNNNN" * 40,
+        "",
+        "gggcccAAA" * 200,
     ]
-    trimmed = (
-        trimmed_df.drop("w_end")
-        .toPandas()
-        .sort_values(["doc_id", "w_start"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(full, trimmed)
+    docs = _mk_docs(spark, texts)
+    key = ["doc_id", "w_start"]
+
+    def run(**kw):
+        pdf = window_stats(docs, id_cols=["doc_id"], f32=False, **kw).toPandas()
+        for c in pdf.columns:
+            if c.endswith("_vec"):
+                pdf[c] = pdf[c].map(tuple)
+        return pdf.sort_values(key).reset_index(drop=True)
+
+    for step in (None, 120):
+        full = {
+            m: run(window=300, step=step, masked=m, with_vectors=True)
+            for m in (False, True)
+        }
+        for fields, masked, with_vectors in _FIELD_SETS:
+            got_df = window_stats(
+                docs, id_cols=["doc_id"], window=300, step=step, f32=False,
+                masked=masked, with_vectors=with_vectors, fields=fields,
+            )
+            cols = [n for n, _ in _scalar_fields(fields)]
+            vecs = ["k2_vec", "k3_vec", "k4_vec"] if with_vectors else []
+            assert [f.name for f in got_df.schema.fields] == (
+                ["doc_id", "w_start", "w_end"] + cols + vecs
+            )
+            got = run(
+                window=300, step=step, masked=masked,
+                with_vectors=with_vectors, fields=fields,
+            )
+            assert len(got) > 500
+            pd.testing.assert_frame_equal(
+                got, full[masked][got.columns.tolist()], check_exact=True,
+                obj=f"fields={fields} step={step}",
+            )
     with pytest.raises(ValueError):
         _scalar_fields(["nope"])
