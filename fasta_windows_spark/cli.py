@@ -68,6 +68,21 @@ def _input_format(args) -> str:
     return "parquet"
 
 
+def sorted_by_id(df, id_col: str, frame_fn):
+    """``frame_fn(pages)``'s window rows in (id, w_start) order, partition
+    by partition, with the window kernel run once.
+
+    ``repartitionByRange(id_col)`` puts every page of one id in one
+    partition and orders the partitions by id, so sorting the windows
+    within each partition gives exactly ``orderBy(id, w_start)``. Its range
+    sample reads pages from the scan; an ``orderBy`` over the kernel's
+    output instead samples that output in a job of its own, running the
+    kernel twice."""
+    return frame_fn(df.repartitionByRange(id_col)).sortWithinPartitions(
+        id_col, "w_start"
+    )
+
+
 def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
     from pyspark.sql import SparkSession
@@ -123,20 +138,23 @@ def main(argv=None) -> int:
             print(f"[+]\tStreaming output: {args.out_dir}/{args.output}_host_windows")
             return 0
 
-        # Export model (both modes): distributed orderBy(id, start) — the
-        # reference's post-channel sort, fw.rs:149-152 — then stream the
-        # sorted partitions through toLocalIterator into the TSV writers.
-        # Driver memory holds ONE partition at a time, never the whole
-        # result (a 100 TB corpus' window table would OOM any collect).
+        # Export model (both modes): range-partition the PAGES by id, run
+        # the kernel, sort windows within partitions — the reference's
+        # post-channel (id, start) sort, fw.rs:149-152, with the kernel run
+        # once (sorted_by_id) — then stream the partitions in order through
+        # toLocalIterator into the writers. Driver memory holds ONE
+        # partition at a time, never the whole result (a 100 TB corpus'
+        # window table would OOM any collect); the default mode's TSV text
+        # is formatted from Arrow on the executors.
         if args.entropy:
             # fast path: entropy + CTW only (main.rs:90-95, entropy.rs:86-156)
             from .functions.udfs import ctw_udf_frame
             from .sink_tsv import write_entropy_bed
 
-            got = ctw_udf_frame(
-                df, text_col=args.text_col, id_cols=[id_col],
+            got = sorted_by_id(df, id_col, lambda d: ctw_udf_frame(
+                d, text_col=args.text_col, id_cols=[id_col],
                 window=args.window_size, step=args.step,
-            ).orderBy(id_col, "w_start")
+            ))
             rows = (
                 dict(id=r[id_col], start=r["w_start"], end=r["w_end"],
                      entropy=r["entropy6"], ctw=r["ctw"])
@@ -147,22 +165,27 @@ def main(argv=None) -> int:
             return 0
 
         from .functions.udfs import window_stats
-        from .sink_tsv import spark_rows_to_writer_iter, write_reference_tsvs
+        from .sink_tsv import DESC_COL, export_reference_tsvs
 
-        ws = window_stats(
-            df,
+        # -d carries the FASTA description through the kernel; inputs
+        # without one print "No description." (fw.rs:98-101)
+        id_cols = [id_col]
+        if args.description and DESC_COL in df.columns:
+            id_cols.append(DESC_COL)
+        ws = sorted_by_id(df, id_col, lambda d: window_stats(
+            d,
             text_col=args.text_col,
-            id_cols=[id_col],
+            id_cols=id_cols,
             window=args.window_size,
             step=args.step,
             masked=args.masked,
             with_ctw=args.ctw,
             with_vectors=True,
             f32=True,
-        ).orderBy(id_col, "w_start")
-        paths = write_reference_tsvs(
-            spark_rows_to_writer_iter(ws), args.out_dir, args.output,
-            description=args.description, ctw=args.ctw, presorted=True,
+        ))
+        paths = export_reference_tsvs(
+            ws, id_col, args.out_dir, args.output,
+            description=args.description, ctw=args.ctw,
         )
         print(f"[+]\tOutput written to directory: {args.out_dir}")
         for p in paths.values():

@@ -37,6 +37,16 @@ from pyspark.sql import functions as F
 BM25_SCALE_NOTE = "exact below 2^53: num <= (2N+1)*22*tf*S, den <= (2df+1)*(10*tf+3)*S+9*dl*N terms"
 
 
+def _lowered(tokens, what: str) -> list[str]:
+    """Query tokens as matched: each must be alphanumeric (it is inlined in
+    SQL), then lowercased, because the text is tokenized from lower(text) —
+    an uppercase token would otherwise match nothing, silently."""
+    for t in tokens:
+        if not t.isalnum():
+            raise ValueError(f"{what} must be alphanumeric: {t!r}")
+    return [t.lower() for t in tokens]
+
+
 def per_doc_term_stats(
     docs: DataFrame, terms, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -52,9 +62,7 @@ def per_doc_term_stats(
         ),
     )
     cols = [F.col(id_col), F.expr("cast(size(_toks) as bigint)").alias("dl")]
-    for t in terms:
-        if not t.isalnum():
-            raise ValueError(f"query term must be alphanumeric: {t!r}")
+    for t in _lowered(terms, "query term"):
         cols.append(
             F.expr(f"cast(size(filter(_toks, x -> x = '{t}')) as bigint)").alias(
                 f"tf_{t}"
@@ -74,6 +82,7 @@ def bm25_search(
     (module docstring). Returns (doc_id, dl, tf_<term>..., score) for the
     topk highest-scoring documents matching at least one term, ordered by
     (score DESC, doc_id)."""
+    terms = _lowered(terms, "query term")
     pd_stats = per_doc_term_stats(docs, terms, text_col, id_col)
     aggs = [
         F.count("*").alias("n_docs"),
@@ -109,6 +118,7 @@ def bm25_search(
 def bm25_oracle_sql(terms=("stream", "window", "join"), topk: int = 20) -> str:
     """DuckDB replay of bm25_search: identical BIGINT clearing, identical
     fixed-order double sum, so the hash comparison is exact."""
+    terms = [t.lower() for t in terms]
     tf_defs = ",\n    ".join(
         f"len(list_filter(toks, x -> x = '{t}'))::BIGINT AS tf_{t}" for t in terms
     )
@@ -184,9 +194,7 @@ def phrase_search(
     n = len(phrase)
     if n < 2:
         raise ValueError("phrase must have at least 2 tokens")
-    for t in phrase:
-        if not t.isalnum():
-            raise ValueError(f"phrase token must be alphanumeric: {t!r}")
+    phrase = _lowered(phrase, "phrase token")
     conds = " AND ".join(
         f"element_at(_toks, i + {j}) = '{t}'" if j else f"element_at(_toks, i) = '{t}'"
         for j, t in enumerate(phrase)
@@ -220,6 +228,7 @@ def phrase_search(
 
 def phrase_search_oracle_sql(phrase=("stream", "window"), topk: int = 50) -> str:
     """DuckDB replay of phrase_search (same 1-based positional lambda)."""
+    phrase = [t.lower() for t in phrase]
     n = len(phrase)
     conds = " AND ".join(
         f"toks[i + {j}] = '{t}'" if j else f"toks[i] = '{t}'"
@@ -529,8 +538,7 @@ def kwic_snippets(
     (array_position + slice + array_join), zero shuffle before the output
     sort; at serving scale this runs over the already-retrieved top-k
     only. Returns (doc_id, pos, snippet) ordered by doc_id."""
-    if not term.isalnum():
-        raise ValueError(f"term must be alphanumeric: {term!r}")
+    (term,) = _lowered((term,), "term")
     return (
         docs.select(
             F.col(id_col),

@@ -64,12 +64,12 @@ def test_cli_export_streams_without_collect(tmp_path, spark, monkeypatch):
         str(tmp_path / "exp"), "t",
     )
 
-    import pyspark.sql
-
     def _no_collect(self, *a, **k):
-        raise AssertionError("CLI export must not collect via toPandas")
+        raise AssertionError("CLI export must not collect the result")
 
-    monkeypatch.setattr(pyspark.sql.DataFrame, "toPandas", _no_collect)
+    # patch the concrete class: it overrides the base pyspark.sql.DataFrame
+    for name in ("toPandas", "toArrow", "collect"):
+        monkeypatch.setattr(type(df), name, _no_collect)
 
     from fasta_windows_spark import cli
 

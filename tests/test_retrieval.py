@@ -153,6 +153,27 @@ def test_phrase_search_trigram(spark):
     assert [(r["doc_id"], r["n_matches"], r["first_pos"]) for r in got] == [(1, 1, 2)]
 
 
+def test_query_tokens_match_case_insensitively(spark):
+    """Text is tokenized from lower(text), so uppercase query tokens are
+    lowercased before matching instead of silently matching nothing."""
+    df = spark.createDataFrame(
+        [(1, "x Stream WINDOW join y stream"), (2, "stream x window")],
+        "doc_id long, text string",
+    )
+
+    def phrase(p):
+        return [tuple(r) for r in retrieval.phrase_search(df, phrase=p).collect()]
+
+    assert phrase(("Stream", "Window")) == phrase(("stream", "window")) == [(1, 1, 2)]
+    assert [tuple(r) for r in retrieval.per_doc_term_stats(df, ("STREAM",))
+            .orderBy("doc_id").collect()] == [(1, 6, 2), (2, 3, 1)]
+    assert [tuple(r) for r in retrieval.kwic_snippets(df, term="Window", context=1)
+            .collect()] == [(1, 3, "stream window join"), (2, 3, "x window")]
+    top = retrieval.bm25_search(df, terms=("Join", "WINDOW")).collect()
+    assert [r["doc_id"] for r in top] == [1, 2]
+    assert top[0]["tf_join"] == 1 and top[0]["tf_window"] == 1
+
+
 def test_phrase_search_plan_is_scan_local(spark):
     """The match itself adds NO shuffle: the only exchange in the plan is
     the TakeOrdered/limit machinery — no join, no explode-regroup."""
