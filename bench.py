@@ -99,15 +99,15 @@ def run_query(spark, fn, sf_dir: str, repeats: int = 3) -> float:
 
 
 def streaming_windows_per_sec(spark, scratch: str, n_pages: int = 24000) -> dict:
-    """End-to-end streaming throughput on the BASELINE.json headline shape:
-    pages stream -> per-page positional window statistics (W=1000, full
-    kernel, Arrow-vectorized) -> watermarked 10-minute host-window agg ->
-    exactly-once parquet sink. Reports sustained POSITIONAL windows/sec
-    (the unit the scaling bench and the reference count), plus pages/sec
-    and text MB/s."""
+    """End-to-end streaming throughput on the BASELINE.json headline shape,
+    run as the library's `streaming/pipeline.host_window_stats`: pages
+    stream -> per-page positional window counts (W=1000 bytes, Arrow
+    kernel) -> watermarked 10-minute host-window agg -> exactly-once
+    parquet sink. Reports sustained POSITIONAL windows/sec (the unit the
+    scaling bench and the reference count), plus pages/sec and text
+    MB/s."""
     import pyspark.sql.functions as F
 
-    from fasta_windows_spark.functions.udfs import window_stats
     from fasta_windows_spark.sources import pages as P
     from fasta_windows_spark.streaming import pipeline as S
 
@@ -125,23 +125,7 @@ def streaming_windows_per_sec(spark, scratch: str, n_pages: int = 24000) -> dict
     P.write_pages_parquet(pdf, src, n_files=32)
 
     t0 = time.perf_counter()
-    stream = S.with_host(S.read_pages_stream(spark, src))
-    ws = window_stats(
-        stream, window=1000, id_cols=["host", "warc_ts"], f32=False,
-        # only what the agg consumes; counts alone skip the k-mer tables
-        # and the finisher
-        fields=["win_len", "cnt_g", "cnt_c"],
-    )
-    agg = (
-        ws.withWatermark("warc_ts", "10 minutes")
-        .groupBy(F.window("warc_ts", "10 minutes").alias("w"), "host")
-        .agg(
-            F.count("*").alias("n_windows"),
-            F.sum("win_len").alias("total_chars"),
-            F.sum("cnt_g").alias("cnt_g"),
-            F.sum("cnt_c").alias("cnt_c"),
-        )
-    )
+    agg = S.host_window_stats(S.read_pages_stream(spark, src), window_bytes=1000)
     q = S.write_exactly_once(agg, out, ck)
     finished = q.awaitTermination(600)
     wall = time.perf_counter() - t0
@@ -163,7 +147,8 @@ def streaming_windows_per_sec(spark, scratch: str, n_pages: int = 24000) -> dict
 
 def capstone_pages_per_sec(spark, scratch: str, n_pages: int = 24000) -> dict:
     """Throughput of the north-star CAPSTONE plan (the full BASELINE.json
-    sentence in one query): per-page JVM count reduction -> stateful
+    sentence in one query): per-page byte counts from the window kernel
+    (one whole-page window) -> stateful
     stream-stream join with the late lang-detection side stream ->
     event-time windowed stats keyed by (host, detected_lang) ->
     exactly-once sink. Reports pages/sec through the chained-stateful

@@ -12,9 +12,10 @@ subprocess (own JVM) so the two measurements share nothing but the input
 files.
 
 The job is the flagship pipeline: pages stream -> per-page positional
-window statistics (W=1000; --mode stats = full kernel, --mode entropy =
-6-bin entropy + CTW depth 6) -> watermarked 10-minute host window
-aggregation -> exactly-once parquet sink.
+window statistics (W=1000; --mode stats = byte counts, run as the
+library's streaming/pipeline.host_window_stats; --mode entropy = 6-bin
+entropy + CTW depth 6) -> watermarked 10-minute host window aggregation
+-> exactly-once parquet sink.
 
 Usage: python bench_scaling.py [--pages 48000] [--page-bytes 8192]
                                [--mode entropy|stats] [--low 2] [--high 8]
@@ -44,7 +45,6 @@ mode = {mode!r}
 from fasta_windows_spark.session import get_spark
 from fasta_windows_spark.streaming import pipeline as S
 from fasta_windows_spark.streaming.listener import ProgressCollector
-from fasta_windows_spark.functions.udfs import window_stats
 import pyspark.sql.functions as F
 
 # event log -> task-level bytes/CPU ledger parsed after the run
@@ -60,12 +60,11 @@ spark.streams.addListener(listener)
 
 t0 = time.perf_counter()
 pages = S.read_pages_stream(spark, src)
-pages = S.with_host(pages)
 if mode == "entropy":
     # entropy-mode analog (entropy.rs:123-136): 6-bin entropy + CTW depth 6
     # per positional window — CPU-bound (the reference's expensive op)
     from fasta_windows_spark.functions.udfs import ctw_udf_frame
-    ws = ctw_udf_frame(pages, window=1000, id_cols=["host", "warc_ts"])
+    ws = ctw_udf_frame(S.with_host(pages), window=1000, id_cols=["host", "warc_ts"])
     win_len = F.col("w_end") - F.col("w_start")
     agg = (
         ws.withWatermark("warc_ts", "10 minutes")
@@ -76,18 +75,10 @@ if mode == "entropy":
                F.avg("ctw").alias("avg_ctw"))
     )
 else:
-    # stats mode: the Arrow window kernel with fields= projection pushdown,
-    # so only the 3 consumed counts are computed (byte histograms, no k-mer
-    # tables or finisher) and cross Arrow IPC back from Python
-    ws = window_stats(pages, window=1000, id_cols=["host", "warc_ts"], f32=False,
-                      fields=["win_len", "cnt_g", "cnt_c"])
-    agg = (
-        ws.withWatermark("warc_ts", "10 minutes")
-          .groupBy(F.window("warc_ts", "10 minutes").alias("w"), "host")
-          .agg(F.count("*").alias("n_windows"),
-               F.sum("win_len").alias("total_chars"),
-               F.sum("cnt_g").alias("cnt_g"), F.sum("cnt_c").alias("cnt_c"))
-    )
+    # stats mode: the library's streaming headline — the Arrow window
+    # kernel, counts only (byte histograms, no k-mer tables or finisher),
+    # into the watermarked host-window aggregate
+    agg = S.host_window_stats(pages, window_bytes=1000)
 q = S.write_exactly_once(agg, os.path.join(run_dir, "out"),
                          os.path.join(run_dir, "ck"))
 q.awaitTermination(3600)

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Sustained end-to-end benchmark: 1M pages (8.18 GB text) through the full
-exactly-once stats pipeline (window kernel -> watermarked host-window agg ->
-checkpointed parquet sink, RocksDB state) on local[32].
+exactly-once stats pipeline (streaming/pipeline.host_window_stats: window
+kernel -> watermarked host-window agg; then a checkpointed parquet sink,
+RocksDB state) on local[32].
 
 Measures BOTH state-commit modes, because they optimize opposite regimes:
 
@@ -42,18 +43,11 @@ shutil.rmtree(run_dir, ignore_errors=True); os.makedirs(run_dir)
 from fasta_windows_spark.session import get_spark
 from fasta_windows_spark.streaming import pipeline as S
 from fasta_windows_spark.streaming.listener import ProgressCollector
-from fasta_windows_spark.functions.udfs import window_stats
 import pyspark.sql.functions as F
 spark = get_spark(app_name="fw-sustained", master="local[32]", shuffle_partitions=32)
 listener = ProgressCollector(); spark.streams.addListener(listener)
 t0 = time.perf_counter()
-pages = S.with_host(S.read_pages_stream(spark, src))
-ws = window_stats(pages, window=1000, id_cols=["host", "warc_ts"], f32=False,
-                  fields=["win_len", "cnt_g", "cnt_c"])
-agg = (ws.withWatermark("warc_ts", "10 minutes")
-         .groupBy(F.window("warc_ts", "10 minutes").alias("w"), "host")
-         .agg(F.count("*").alias("n_windows"), F.sum("win_len").alias("total_chars"),
-              F.sum("cnt_g").alias("cnt_g"), F.sum("cnt_c").alias("cnt_c")))
+agg = S.host_window_stats(S.read_pages_stream(spark, src), window_bytes=1000)
 q = S.write_exactly_once(agg, os.path.join(run_dir, "out"),
                          os.path.join(run_dir, "ck"))
 q.awaitTermination(1100)

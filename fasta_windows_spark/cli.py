@@ -1,15 +1,19 @@
 """spark-submit entry point mirroring the reference CLI (main.rs:13-79).
 
 Flag parity:
-  -w/--window_size  window size in characters (default 1000, main.rs:28-35)
+  -w/--window_size  window size in UTF-8 bytes (default 1000, main.rs:28-35);
+                    also applies under --streaming
   -s/--step         step size (sliding windows; tumbling when omitted —
                     generalizes the reference's tumbling-only -w)
   -m/--masked       masked-mode counting (seq_statsu8.rs:50-58)
   -d/--description  include the description column (fw.rs:235-240)
   -c/--ctw          compute CTW bits/base (fw.rs:91-95, expensive)
   -e/--entropy      entropy-only fast mode -> BED output (entropy.rs:86)
-  --streaming       consume the input directory as a stream (watermarked
-                    event-time aggregation + exactly-once sink)
+  --streaming       consume the input directory as a stream: -w byte
+                    windows per page -> watermarked 10-minute (window,
+                    host) counts in bytes -> exactly-once sink
+                    (streaming/pipeline.host_window_stats); -s/-m/-d/-c/-e
+                    do not apply
 
 Usage (local):  python -m fasta_windows_spark.cli -f pages_parquet_dir -o out
 Cluster:        spark-submit --py-files fasta_windows_spark.zip \
@@ -125,10 +129,12 @@ def main(argv=None) -> int:
             stream = S.read_pages_stream(spark, args.input)
             if args.salt_buckets > 0:
                 agg = S.host_window_stats_salted(
-                    stream, salt_buckets=args.salt_buckets
+                    stream,
+                    salt_buckets=args.salt_buckets,
+                    window_bytes=args.window_size,
                 )
             else:
-                agg = S.host_window_stats(stream)
+                agg = S.host_window_stats(stream, window_bytes=args.window_size)
             q = S.write_exactly_once(
                 agg,
                 f"{args.out_dir}/{args.output}_host_windows",

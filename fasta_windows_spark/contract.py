@@ -5170,7 +5170,7 @@ SELECT token, c,
        ((cum_w - w_int) * 1000000 // w_total)::BIGINT AS cum_lo_fp,
        (cum_w * 1000000 // w_total)::BIGINT AS cum_hi_fp
 FROM cum, tot
-ORDER BY w_fp DESC, token
+ORDER BY w_int DESC, token
 """,
 )
 def docs_negative_sampling(spark, sf_dir):

@@ -264,11 +264,9 @@ POSTINGS_BLOCK = 4096  # docs per posting block (Lucene-style block postings)
 def _varint_bytes_sql(v: str) -> str:
     """LEB128 byte count of a non-negative BIGINT, as a portable CASE
     (identical text works in Spark SQL and DuckDB)."""
-    return (
-        f"(CASE WHEN {v} < 128 THEN 1 WHEN {v} < 16384 THEN 2 "
-        f"WHEN {v} < 2097152 THEN 3 WHEN {v} < 268435456 THEN 4 "
-        f"WHEN {v} < 34359738368 THEN 5 ELSE 6 END)"
-    )
+    # 7 payload bits per byte; 2^63 = 2^(7*9), so 9 bytes cover every BIGINT
+    cases = " ".join(f"WHEN {v} < {1 << (7 * n)} THEN {n}" for n in range(1, 9))
+    return f"(CASE {cases} ELSE 9 END)"
 
 
 def postings_bytes_audit(
@@ -439,15 +437,12 @@ def hybrid_rrf(
 
 
 def _bitwidth_sql(v: str) -> str:
-    """Bits needed for a non-negative BIGINT (0 -> 0 bits), portable CASE-free
-    form: floor(log2(v)) + 1 via the 63 - leading-zero identity is not
-    portable, so use length of the binary string minus leading zeros —
-    Spark and DuckDB both have bin()/bit_length? Not portably; use a CASE
-    ladder over powers of two (deltas in a 4096-doc block need <= 13 bits,
-    absolute ids more — ladder to 40 bits covers 10^12 docs)."""
-    cases = " ".join(
-        f"WHEN {v} < {1 << b} THEN {b}" for b in range(1, 41)
-    )
+    """Bits needed for a non-negative BIGINT (0 -> 0 bits), as a CASE ladder
+    over powers of two (identical text works in Spark SQL and DuckDB, which
+    share no leading-zero-count function). Exact over the whole
+    non-negative BIGINT range: every width 1..62 has its rung, and
+    anything at or above 2^62 needs 63."""
+    cases = " ".join(f"WHEN {v} < {1 << b} THEN {b}" for b in range(1, 63))
     return f"(CASE WHEN {v} = 0 THEN 0 {cases} ELSE 63 END)"
 
 

@@ -523,9 +523,11 @@ def negative_sampling_table(
     segment-tree window aggregation vs Spark's sequential frame; integer
     sums cannot). Plan: one token groupBy, a 1-row total broadcast, one
     vocabulary-sized cumulative window from a deterministic
-    (w DESC, token) total order (vocabulary rows are metadata-sized next
-    to the corpus — the BPE-trainer precedent for a single-partition
-    window). The last row's cum_hi_fp equals fp_scale by construction.
+    (w_int DESC, token) total order (vocabulary rows are metadata-sized
+    next to the corpus — the BPE-trainer precedent for a single-partition
+    window). Rows come out in that same order, so each row's cum_lo_fp is
+    the previous row's cum_hi_fp, and the last row's cum_hi_fp equals
+    fp_scale by construction.
 
     Overflow bound: the largest product is w_total * fp_scale; with both
     quantizers at 1e6 that stays under 2^63 while sum(c^0.75) < ~9.2e6
@@ -549,6 +551,9 @@ def negative_sampling_table(
     return (
         w.crossJoin(F.broadcast(tot))
         .withColumn("cum_w", F.sum("w_int").over(ordering))
+        # emit in the accumulation order, so consecutive ranges tile even
+        # where two w_int floor to one w_fp
+        .orderBy(F.desc("w_int"), F.asc("token"))
         .selectExpr(
             "token",
             "c",
@@ -556,5 +561,4 @@ def negative_sampling_table(
             f"cast((cum_w - w_int) * {fp_scale} DIV w_total as bigint) AS cum_lo_fp",
             f"cast(cum_w * {fp_scale} DIV w_total as bigint) AS cum_hi_fp",
         )
-        .orderBy(F.desc("w_fp"), F.asc("token"))
     )

@@ -125,7 +125,7 @@ def write_reference_tsvs(
     with ExitStack() as stack:
         paths, fh = _open_tsvs(stack, out_dir, output, description, ctw)
         for r in rows:
-            prefix = [r["id"]]
+            prefix = [str(r["id"])]
             if description:
                 prefix.append(r.get("desc") or "No description.")
             prefix += [str(r["start"]), str(r["end"])]

@@ -1,10 +1,15 @@
 """Structured Streaming graphs: the event-time re-expression of the
 reference's windowed statistics (SURVEY.md §2.7, north_rule).
 
-Hot path shape: watermark-bounded windowed hash-aggregate in the RocksDB
-state store (partial aggregation before the shuffle is automatic for
-streaming aggs), fed by JVM count expressions / the Arrow-batched window
-kernel — zero per-row Python.
+Hot path shape: pages -> the Arrow-batched positional window kernel
+(``functions/udfs.window_stats``, counts only) -> watermark on its output
+-> windowed hash-aggregate in the RocksDB state store (partial aggregation
+before the shuffle is automatic for streaming aggs) -> exactly-once sink,
+with zero per-row Python. Every host-window aggregate here (tumbling,
+sliding, salted, session, the north-star join) shares that one map side
+(`_window_counts`) and one aggregate list, so lengths are UTF-8 bytes, as
+in the reference (seq_statsu8.rs), and a page with empty text counts
+nowhere.
 
 Sinks: the production target is an Iceberg table (exactly-once via
 idempotent epoch commits); this sandbox has no Iceberg runtime jar, so the
@@ -56,30 +61,43 @@ def with_host(df: DataFrame) -> DataFrame:
     return df.withColumn("host", F.parse_url(F.col("url"), F.lit("HOST")))
 
 
-def _char_count(col: str, ch: str) -> F.Column:
-    # occurrences of a literal char, case-folded — pure JVM expression
-    base = F.length(col) - F.length(F.replace(F.col(col), F.lit(ch)))
-    low = F.length(col) - F.length(F.replace(F.col(col), F.lit(ch.lower())))
-    return (base + low).cast("long")
+_CNT_COLS = ("cnt_a", "cnt_c", "cnt_g", "cnt_t", "cnt_n")
+_SUM_COLS = ("n_windows", "n_pages", "total_chars", *_CNT_COLS)
+
+# one window per page: the whole-page window (`kmer_long_rows`' default)
+_PAGE_WINDOW = 1 << 30
 
 
-def page_count_columns(
-    df: DataFrame, text_col: str = "text", extra_cols: tuple = ()
+def _window_counts(
+    pages: DataFrame, window_bytes: int, watermark: str, extra_cols: tuple = ()
 ) -> DataFrame:
-    """Per-page associative state: length + case-folded ACGTN counts, as
-    whole-stage-codegen JVM expressions (the streaming-merge unit; merging
-    = summing these columns). `extra_cols` ride through (e.g. a salt key)."""
-    return df.select(
-        "host",
-        "warc_ts",
-        *extra_cols,
-        F.length(text_col).cast("long").alias("n_chars"),
-        _char_count(text_col, "A").alias("cnt_a"),
-        _char_count(text_col, "C").alias("cnt_c"),
-        _char_count(text_col, "G").alias("cnt_g"),
-        _char_count(text_col, "T").alias("cnt_t"),
-        _char_count(text_col, "N").alias("cnt_n"),
-    )
+    """The one map side of every host-window aggregate: the positional
+    window kernel (``functions/udfs.window_stats``) over each page's text,
+    counts only — one row per (page, window) with its UTF-8 byte length
+    and case-folded ACGTN counts — watermarked on warc_ts. `extra_cols`
+    ride through (e.g. a salt key). A page with empty (or null) text makes
+    no window."""
+    from ..functions.udfs import window_stats
+
+    return window_stats(
+        with_host(pages),
+        id_cols=["host", "warc_ts", *extra_cols],
+        window=window_bytes,
+        fields=["win_len", *_CNT_COLS],
+        f32=False,
+    ).withWatermark("warc_ts", watermark)
+
+
+def _window_count_aggs() -> list:
+    """The aggregate list over `_window_counts` rows; merging = summing.
+    Each non-empty page has exactly one window starting at byte 0, so
+    counting those counts pages."""
+    return [
+        F.count("*").alias("n_windows"),
+        F.count_if(F.col("w_start") == 0).alias("n_pages"),
+        F.sum("win_len").alias("total_chars"),
+        *[F.sum(c).alias(c) for c in _CNT_COLS],
+    ]
 
 
 def _entropy6_finisher() -> F.Column:
@@ -94,15 +112,16 @@ def _entropy6_finisher() -> F.Column:
         - F.col("cnt_n")
     ).cast("double")
     terms = []
-    for c in ("cnt_a", "cnt_c", "cnt_g", "cnt_t", "cnt_n"):
+    for c in _CNT_COLS:
         x = F.col(c).cast("double")
         terms.append(F.when(x > 0, (x / ln) * F.log2(x / ln)).otherwise(0.0))
     terms.append(F.when(oth > 0, (oth / ln) * F.log2(oth / ln)).otherwise(0.0))
     return -sum(terms[1:], start=terms[0])
 
 
-def _finish_host_window(agg: DataFrame) -> DataFrame:
-    """Shared finisher: scalar stats from merged (w, host) count columns."""
+def _finish_host_window(agg: DataFrame, keys: tuple = ()) -> DataFrame:
+    """Shared finisher: scalar stats from merged (w, host, *keys) count
+    columns."""
     gc_den = (F.col("cnt_g") + F.col("cnt_c") + F.col("cnt_a") + F.col("cnt_t")).cast(
         "double"
     )
@@ -110,13 +129,8 @@ def _finish_host_window(agg: DataFrame) -> DataFrame:
         F.col("w.start").alias("w_start"),
         F.col("w.end").alias("w_end"),
         "host",
-        "n_pages",
-        "total_chars",
-        "cnt_a",
-        "cnt_c",
-        "cnt_g",
-        "cnt_t",
-        "cnt_n",
+        *keys,
+        *_SUM_COLS,
         F.round(_entropy6_finisher(), 6).alias("entropy6_merged"),
         F.round(
             (F.col("cnt_g") + F.col("cnt_c")).cast("double") / F.nullif(gc_den, F.lit(0)),
@@ -125,30 +139,29 @@ def _finish_host_window(agg: DataFrame) -> DataFrame:
     )
 
 
-_SUM_COLS = ("total_chars", "cnt_a", "cnt_c", "cnt_g", "cnt_t", "cnt_n")
-
-
 def host_window_stats(
     pages: DataFrame,
     window: str = "10 minutes",
     slide: str | None = None,
     watermark: str = "10 minutes",
+    window_bytes: int = 1000,
 ) -> DataFrame:
     """Tumbling/sliding event-time windowed aggregation keyed by url-host:
     the F.window analog of chunks(window_size) (fw.rs:83). Append-mode
-    emission once the watermark passes the window end; late rows dropped."""
-    p = with_host(pages).withWatermark("warc_ts", watermark)
-    counts = page_count_columns(p)
+    emission once the watermark passes the window end; late rows dropped.
+
+    Map side: the positional window kernel cuts each page into
+    `window_bytes`-byte windows (`_window_counts`); the watermark sits on
+    its output, so ``numRowsDroppedByWatermark`` counts window rows, not
+    pages. Per (window, host): ``n_windows`` positional windows,
+    ``n_pages`` pages, ``total_chars`` UTF-8 BYTES (the reference's u8
+    unit, seq_statsu8.rs) and the case-folded ACGTN counts, then
+    ``entropy6_merged`` and ``gc_prop``. Only ``n_windows`` depends on
+    `window_bytes`. A page with empty text makes no window, so it counts
+    in no column — the reference emits nothing for an empty record."""
+    rows = _window_counts(pages, window_bytes, watermark)
     win = F.window("warc_ts", window, slide) if slide else F.window("warc_ts", window)
-    agg = counts.groupBy(win.alias("w"), "host").agg(
-        F.count("*").alias("n_pages"),
-        F.sum("n_chars").alias("total_chars"),
-        F.sum("cnt_a").alias("cnt_a"),
-        F.sum("cnt_c").alias("cnt_c"),
-        F.sum("cnt_g").alias("cnt_g"),
-        F.sum("cnt_t").alias("cnt_t"),
-        F.sum("cnt_n").alias("cnt_n"),
-    )
+    agg = rows.groupBy(win.alias("w"), "host").agg(*_window_count_aggs())
     return _finish_host_window(agg)
 
 
@@ -157,27 +170,20 @@ def salted_host_window_partials(
     window: str = "10 minutes",
     watermark: str = "10 minutes",
     salt_buckets: int = 8,
+    window_bytes: int = 1000,
 ) -> DataFrame:
     """Stage 1 of the salted hot-host aggregation: group by (window, host,
     salt) so one viral host's rows land on `salt_buckets` state-store keys
     (and shuffle partitions) instead of one. Salt is DETERMINISTIC per url
     (xxhash64 mod buckets) — a replayed micro-batch after failure re-salts
-    identically, which rand() would not (exactly-once safety)."""
-    p = with_host(pages).withWatermark("warc_ts", watermark)
-    p = p.withColumn(
+    identically, which rand() would not (exactly-once safety). Same map
+    side and aggregates as `host_window_stats`."""
+    salted = pages.withColumn(
         "salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets)).cast("int")
     )
-    counts = page_count_columns(p, extra_cols=("salt",))
-    return counts.groupBy(
-        F.window("warc_ts", window).alias("w"), "host", "salt"
-    ).agg(
-        F.count("*").alias("n_pages"),
-        F.sum("n_chars").alias("total_chars"),
-        F.sum("cnt_a").alias("cnt_a"),
-        F.sum("cnt_c").alias("cnt_c"),
-        F.sum("cnt_g").alias("cnt_g"),
-        F.sum("cnt_t").alias("cnt_t"),
-        F.sum("cnt_n").alias("cnt_n"),
+    rows = _window_counts(salted, window_bytes, watermark, ("salt",))
+    return rows.groupBy(F.window("warc_ts", window).alias("w"), "host", "salt").agg(
+        *_window_count_aggs()
     )
 
 
@@ -186,6 +192,7 @@ def host_window_stats_salted(
     window: str = "10 minutes",
     watermark: str = "10 minutes",
     salt_buckets: int = 8,
+    window_bytes: int = 1000,
 ) -> DataFrame:
     """Hot-host-skew-safe twin of `host_window_stats` (north_rule skew item,
     VERDICT r2 item 5): salted pre-aggregation into `salt_buckets` keys per
@@ -195,25 +202,25 @@ def host_window_stats_salted(
     the state/shuffle distribution changes: per-key state rows and per-task
     merge input are bounded by 1/salt_buckets of the hot host's traffic,
     while the stage-2 merge handles salt_buckets tiny rows per host."""
-    partials = salted_host_window_partials(pages, window, watermark, salt_buckets)
+    partials = salted_host_window_partials(
+        pages, window, watermark, salt_buckets, window_bytes
+    )
     merged = partials.groupBy(
         F.window(F.window_time("w"), window).alias("w"), "host"
-    ).agg(
-        F.sum("n_pages").alias("n_pages"),
-        *[F.sum(c).alias(c) for c in _SUM_COLS],
-    )
+    ).agg(*[F.sum(c).alias(c) for c in _SUM_COLS])
     return _finish_host_window(merged)
 
 
 def host_session_stats(
     pages: DataFrame, gap: str = "5 minutes", watermark: str = "10 minutes"
 ) -> DataFrame:
-    """Session windows keyed by url-host (SURVEY.md §2.7)."""
-    p = with_host(pages).withWatermark("warc_ts", watermark)
+    """Session windows keyed by url-host (SURVEY.md §2.7): ``n_pages`` and
+    ``total_chars`` (UTF-8 bytes) per session, from the shared map side at
+    one window per page. Pages with empty text make no window."""
+    rows = _window_counts(pages, _PAGE_WINDOW, watermark)
     return (
-        page_count_columns(p)
-        .groupBy(F.session_window("warc_ts", gap).alias("w"), "host")
-        .agg(F.count("*").alias("n_pages"), F.sum("n_chars").alias("total_chars"))
+        rows.groupBy(F.session_window("warc_ts", gap).alias("w"), "host")
+        .agg(*_window_count_aggs())
         .select(
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
@@ -238,7 +245,7 @@ def kmer_long_rows(pages: DataFrame, ks=(2, 3, 4), window_chars: int | None = No
     ws = window_stats(
         with_host(pages),
         id_cols=["host", "warc_ts"],
-        window=window_chars or (1 << 30),
+        window=window_chars or _PAGE_WINDOW,
         with_vectors=True,
         fields=[],
     )
@@ -322,10 +329,11 @@ def north_star_stats_with_lang(
     into event-time tumbling windows keyed by (host, detected_lang), ready
     for the exactly-once sink. Two scale decisions:
 
-    1. Counts REDUCE BEFORE the join: each page collapses to six longs
-       (length + case-folded ACGTN counts, whole-stage-codegen JVM
-       expressions) before touching join state, so the RocksDB join buffer
-       holds ~50 bytes/page instead of the page text — at 10^12 pages the
+    1. Counts REDUCE BEFORE the join: the shared map side
+       (`_window_counts`, one whole-page window) collapses each page to
+       one row of longs (byte length + case-folded ACGTN counts) before
+       touching join state, so the RocksDB join buffer holds ~100
+       bytes/page instead of the page text — at 10^12 pages the
        difference between a working join and an OOM.
     2. The join is INNER within ±`bound` of warc_ts with watermarks on
        both sides (state eviction), then the windowed aggregation chains
@@ -336,9 +344,10 @@ def north_star_stats_with_lang(
 
     Batch twin: this SAME function over static frames (withWatermark is a
     no-op in batch plans — EliminateEventTimeWatermark), pinned by
-    `test_north_star_pipeline_stream_matches_batch`."""
-    p = with_host(pages).withWatermark("warc_ts", pages_watermark)
-    counts = page_count_columns(p).alias("p")
+    `test_north_star_pipeline_stream_matches_batch`. Bytes, not
+    characters, and a page with empty text counts nowhere, as in
+    `host_window_stats`."""
+    counts = _window_counts(pages, _PAGE_WINDOW, pages_watermark).alias("p")
     l = lang.withWatermark("detect_ts", lang_watermark).alias("l")
     cond = (
         (F.col("p.host") == F.col("l.host"))
@@ -349,46 +358,14 @@ def north_star_stats_with_lang(
         F.col("p.host").alias("host"),
         F.col("p.warc_ts").alias("warc_ts"),
         F.col("l.lang").alias("detected_lang"),
-        "n_chars",
-        "cnt_a",
-        "cnt_c",
-        "cnt_g",
-        "cnt_t",
-        "cnt_n",
+        "w_start",
+        "win_len",
+        *_CNT_COLS,
     )
     agg = joined.groupBy(
         F.window("warc_ts", window).alias("w"), "host", "detected_lang"
-    ).agg(
-        F.count("*").alias("n_pages"),
-        F.sum("n_chars").alias("total_chars"),
-        F.sum("cnt_a").alias("cnt_a"),
-        F.sum("cnt_c").alias("cnt_c"),
-        F.sum("cnt_g").alias("cnt_g"),
-        F.sum("cnt_t").alias("cnt_t"),
-        F.sum("cnt_n").alias("cnt_n"),
-    )
-    gc_den = (
-        F.col("cnt_g") + F.col("cnt_c") + F.col("cnt_a") + F.col("cnt_t")
-    ).cast("double")
-    return agg.select(
-        F.col("w.start").alias("w_start"),
-        F.col("w.end").alias("w_end"),
-        "host",
-        "detected_lang",
-        "n_pages",
-        "total_chars",
-        "cnt_a",
-        "cnt_c",
-        "cnt_g",
-        "cnt_t",
-        "cnt_n",
-        F.round(_entropy6_finisher(), 6).alias("entropy6_merged"),
-        F.round(
-            (F.col("cnt_g") + F.col("cnt_c")).cast("double")
-            / F.nullif(gc_den, F.lit(0)),
-            6,
-        ).alias("gc_prop"),
-    )
+    ).agg(*_window_count_aggs())
+    return _finish_host_window(agg, keys=("detected_lang",))
 
 
 def filter_blocklist_stream(
@@ -433,43 +410,6 @@ def host_window_distinct_urls(
         .select(
             F.col("w.start").alias("w_start"), "host", "n_urls_approx", "n_pages"
         )
-    )
-
-
-def window_token_sketch(
-    pages: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "10 minutes",
-    width: int = 32,
-    depth: int = 4,
-) -> DataFrame:
-    """Streaming count-min sketch per event-time window: the depth x width
-    token-counter table of each window, maintained as a watermarked
-    windowed aggregate. Counter cells are plain additive counts, so (a)
-    per-window state is bounded at depth*width groups no matter how many
-    distinct tokens the window sees — the sketch point at 10^12 pages —
-    and (b) the streamed table is IDENTICAL to the batch sketch
-    (operators/sketch.py cms_sketch) on the same input, not merely close.
-    Downstream heavy-hitter probes read the emitted table with
-    cms_estimates against any candidate set."""
-    from ..operators.sketch import _bucket_array, _tok_hash
-
-    pairs = (
-        pages.withWatermark("warc_ts", watermark)
-        .select(
-            "warc_ts",
-            F.explode(F.split(F.lower("text"), " ")).alias("tok"),
-        )
-        .select("warc_ts", _tok_hash("tok").alias("h"))
-        .select(
-            "warc_ts",
-            F.posexplode(_bucket_array(depth, width)).alias("row", "bucket"),
-        )
-    )
-    return (
-        pairs.groupBy(F.window("warc_ts", window).alias("w"), "row", "bucket")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("w_start"), "row", "bucket", "cnt")
     )
 
 
@@ -652,41 +592,6 @@ def write_topn_hosts_per_window(
 
     w = (
         agg.writeStream.foreachBatch(emit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if once:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def write_bpe_token_counts_stream(
-    pages: DataFrame,
-    out_path: str,
-    checkpoint: str,
-    merges=None,
-    once: bool = True,
-):
-    """Per-page BPE token counts on the STREAM, by running the BATCH
-    operator on each micro-batch via foreachBatch — the operator-reuse
-    pattern: `functions.bpe.bpe_token_counts`'s vocabulary trick (JVM
-    explode → DISTINCT words → one Arrow encode pass → broadcast join
-    back) applies per micro-batch unchanged, so corpus text still never
-    crosses into Python and the Arrow pass stays vocabulary-sized per
-    batch. Counting is stateless per page, so per-batch execution is
-    exact (no cross-batch state needed). Idempotent under replay the
-    same way as write_topn_hosts_per_window: each batch overwrites its
-    own `batch_id=<id>` partition directory."""
-    from ..functions.bpe import bpe_token_counts
-
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
-        counts = bpe_token_counts(
-            batch_df.select(F.col("url").alias("doc_id"), "text"), merges
-        )
-        counts.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
-
-    w = (
-        pages.writeStream.foreachBatch(emit)
         .outputMode("append")
         .option("checkpointLocation", checkpoint)
     )
@@ -888,64 +793,3 @@ def vacuum_sink_orphans(
         if not dry_run:
             os.remove(full)
     return victims
-
-
-def encode_embeddings_stream(
-    emb: DataFrame, centroids, books, m: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Online ANN index ingest: PQ-encode a stream of new embeddings under
-    ALREADY-FITTED tables (fit offline on a sample — operators/cluster.py
-    pq_fit — encode forever). The encode is pure narrow column arithmetic
-    (no aggregation, no join: codebooks ride as plan literals), so it is
-    stream-safe as-is and emits one (id, cell, code_0..m-1) row per input
-    row, exactly the batch encoder's output — appendable straight into the
-    exactly-once sink as index segments."""
-    from ..operators.cluster import pq_encode_with
-
-    return pq_encode_with(emb, centroids, books, m, id_col, vec_col)
-
-
-def write_lang_id_stream(
-    pages: DataFrame,
-    profiles_rows: list,
-    out_path: str,
-    checkpoint: str,
-    n: int = 3,
-    top: int = 64,
-    once: bool = True,
-):
-    """In-stream language ID with OFFLINE-trained rank profiles (train
-    once on labelled data — functions/text.py char_ngram_profiles — then
-    classify every arriving page): foreachBatch operator reuse, because
-    the per-doc top-N gram ranking is a window function (unsupported in a
-    streaming query) but each page's grams derive from its single row, so
-    a batch-local classification is exact. Idempotent under micro-batch
-    replay via the batch_id=<id> overwrite recipe (same contract as
-    write_topn_hosts_per_window). `profiles_rows` is the collected
-    (lang, gram, rank) table — profile-sized, rides the closure and
-    broadcasts inside each batch."""
-    from ..functions.text import classify_rank_profile
-
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            prof = batch_df.sparkSession.createDataFrame(
-                profiles_rows, ["lang", "gram", "rank"]
-            )
-            out = classify_rank_profile(
-                batch_df.select("url", "text"), prof, n=n, top=top, id_col="url"
-            )
-        else:
-            out = batch_df.sparkSession.createDataFrame(
-                [], "url string, pred_lang string, dist long"
-            )
-        out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
-
-    w = (
-        pages.writeStream.foreachBatch(emit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if once:
-        w = w.trigger(availableNow=True)
-    return w.start()

@@ -2,6 +2,8 @@
 
 import os
 
+import pytest
+
 from fasta_windows_spark.sources import pages as P
 from fasta_windows_spark.sink_tsv import stats_header
 
@@ -127,4 +129,79 @@ def test_cli_streaming_mode(tmp_path, spark):
     g = got.orderBy("w_start", "host").toPandas()
     s = salted.orderBy("w_start", "host").toPandas()
     assert list(g.columns) == list(s.columns)
+    assert "n_windows" in s.columns
     assert g.equals(s)
+
+
+# (url, minute, text): non-ASCII letters, mixed-case bases, one empty page
+# next to others, and a host whose only page is empty
+_BYTES_PAGES = [
+    ("https://a.example/1", 1, "héllo ACGT wörld " * 4),
+    ("https://a.example/2", 3, "acgtNNnn ünï ACgt"),
+    ("https://a.example/3", 4, ""),
+    ("https://a.example/4", 12, "naïve GATTACA ñandú " * 3),
+    ("https://b.example/1", 2, "基因组 acgt 🧬 GGCC " * 5),
+    ("https://b.example/2", 15, "AaCcGgTtNn" * 9),
+    ("https://b.example/3", 21, "ÅÇĞŤ acgtn " * 2),
+    ("https://c.example/1", 13, ""),
+    ("https://a.example/5", 45, "ACGT"),
+]
+
+
+@pytest.mark.parametrize("window", [None, 50], ids=["w_default", "w50"])
+def test_cli_streaming_counts_utf8_bytes(tmp_path, spark, window):
+    """CLI --streaming counts UTF-8 bytes through the window kernel: per
+    (10-minute window, host) the sink equals a pandas recomputation of the
+    byte total, the case-folded ACGTN counts, the non-empty page count and
+    the number of -w windows; a page with empty text counts nowhere."""
+    import math
+
+    import pandas as pd
+
+    from fasta_windows_spark import cli
+
+    base = pd.Timestamp("2024-01-01 10:00:00")
+    pdf = pd.DataFrame(
+        {
+            "url": [u for u, _, _ in _BYTES_PAGES],
+            "warc_ts": [base + pd.Timedelta(minutes=m) for _, m, _ in _BYTES_PAGES],
+            "html": [b"x"] * len(_BYTES_PAGES),
+            "text": [t for _, _, t in _BYTES_PAGES],
+            "lang": ["en"] * len(_BYTES_PAGES),
+        }
+    )
+    src = str(tmp_path / "pages")
+    P.write_pages_parquet(pdf, src, n_files=1)
+    out_dir = str(tmp_path / "fw_out")
+    w_args = [] if window is None else ["-w", str(window)]
+    assert cli.main(["-f", src, "-o", "b", "--streaming", *w_args,
+                     "--out-dir", out_dir]) == 0
+    cols = ["n_windows", "n_pages", "total_chars",
+            "cnt_a", "cnt_c", "cnt_g", "cnt_t", "cnt_n"]
+    got = (
+        spark.read.parquet(os.path.join(out_dir, "b_host_windows"))
+        .toPandas().set_index(["w_start", "host"]).sort_index()[cols]
+    )
+
+    w = window or 1000
+    pages = pdf[pdf["text"] != ""].assign(
+        w_start=pdf["warc_ts"].dt.floor("10min"),
+        host=pdf["url"].str.split("/").str[2],
+        nbytes=pdf["text"].map(lambda t: len(t.encode())),
+    )
+    pages = pages.assign(
+        n_windows=pages["nbytes"].map(lambda b: math.ceil(b / w)),
+        n_pages=1,
+        total_chars=pages["nbytes"],
+        **{f"cnt_{b.lower()}": pages["text"].map(
+            lambda t, b=b: t.count(b) + t.count(b.lower())) for b in "ACGTN"},
+    )
+    # append mode emits the windows the final watermark (last event - 10
+    # minutes = 10:35) has closed
+    closed = pages[pages["w_start"] + pd.Timedelta(minutes=10)
+                   <= pdf["warc_ts"].max() - pd.Timedelta(minutes=10)]
+    want = closed.groupby(["w_start", "host"])[cols].sum().sort_index()
+    assert len(want) == 5
+    assert got.index.tolist() == want.index.tolist()
+    assert (got.astype("int64").to_numpy() == want.astype("int64").to_numpy()).all(), (
+        got, want)

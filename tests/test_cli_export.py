@@ -168,14 +168,19 @@ def test_cli_export_plans_range_partition_below_kernel(spark, tmp_path,
 
 def test_cli_integer_ids(spark, tmp_path):
     """A documents-schema input (integer doc_id) exports with decimal ids in
-    numeric id order."""
+    numeric id order, byte for byte what the reference writer prints."""
     src = str(tmp_path / "docs")
     spark.createDataFrame(
         [(10, "ACGT" * 5), (2, "GGCC" * 5), (1, "AATT" * 5)], "doc_id long, text string"
     ).write.parquet(src)
     out = str(tmp_path / "cli")
     assert cli.main(["-f", src, "-o", "t", "-w", str(W), "--out-dir", out]) == 0
-    for key, text in _cli_tsvs(out, "t").items():
+    got = _cli_tsvs(out, "t")
+    for key, text in got.items():
         rows = [ln.split("\t")[:3] for ln in text.splitlines()[1:]]
         assert rows == [["1", "0", "16"], ["1", "16", "20"], ["2", "0", "16"],
                         ["2", "16", "20"], ["10", "0", "16"], ["10", "16", "20"]], key
+    exp = _reference_tsvs(spark.read.parquet(src), str(tmp_path / "exp"),
+                          ["doc_id"], [])
+    for key in TSV_FILES:
+        assert got[key] == exp[key], key

@@ -315,6 +315,46 @@ def test_hybrid_rrf_matches_python_fusion(spark):
         )
 
 
+_LADDER_VALUES = sorted(
+    {0, 1, 2**63 - 1}
+    | {v for b in range(1, 63) for v in (2**b - 1, 2**b, 2**b + 1)}
+)
+
+
+def test_cost_ladders_exact_over_bigint(spark):
+    """The varint-size and bit-width CASE ladders are exact over the whole
+    non-negative BIGINT range, in Spark and in DuckDB (the oracle runs the
+    same text): every power of two and its neighbours, past 2^42 too."""
+    import duckdb
+
+    vals = ", ".join(f"({v})" for v in _LADDER_VALUES)
+    sql = (
+        f"SELECT v, {retrieval._varint_bytes_sql('v')} AS nb, "
+        f"{retrieval._bitwidth_sql('v')} AS bw "
+        f"FROM (VALUES {vals}) AS t(v) ORDER BY v"
+    )
+    want = [(v, _py_varint_len(v), v.bit_length()) for v in _LADDER_VALUES]
+    spark_rows = [tuple(r) for r in spark.sql(sql).collect()]
+    duck_rows = [tuple(r) for r in duckdb.sql(sql).fetchall()]
+    assert spark_rows == want
+    assert duck_rows == want
+
+
+def test_postings_audits_price_ids_past_2_42(spark):
+    """End to end through both audits: absolute block heads at 2^42, 2^49
+    and 2^62 cost their true LEB128 length, and a block whose deltas span
+    2^49 packs at 49 bits."""
+    ids = [2**42, 2**49, 2**62]
+    df = spark.createDataFrame([(i, "tok") for i in ids], "doc_id long, text string")
+    row = retrieval.postings_bytes_audit(df, min_df=1).collect()[0]
+    assert row["n_blocks"] == 3
+    assert row["varint_bytes"] == 7 + 8 + 9
+    # one block for the two low ids: head 2^42, one delta 2^49 - 2^42
+    packed = retrieval.postings_bitpack_audit(df, min_df=1, block=2**61).collect()[0]
+    assert packed["n_blocks"] == 2
+    assert packed["bitpack_bytes"] == (8 + 1 + (49 + 7) // 8) + (8 + 1)
+
+
 # --- bitpack audit + KWIC ----------------------------------------------------
 
 

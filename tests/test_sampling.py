@@ -542,6 +542,16 @@ def test_negative_sampling_table_properties(spark):
         assert r.w_fp == w_int[r.token] * 10**6 // total
 
 
+def test_negative_sampling_ranges_tile_when_w_fp_ties(spark):
+    """Two tokens whose w_int differ but floor to one w_fp, with the token
+    tie-break reversed ("b" is heavier than "a"): the table lists rows in
+    the order the ranges accumulate, so they still tile."""
+    df = spark.createDataFrame([(1, "z " * 11 + "b b a")], "doc_id long, text string")
+    rows = sampling.negative_sampling_table(df, fp_scale=10).collect()
+    assert [(r.token, r.c, r.w_fp) for r in rows] == [("z", 11, 6), ("b", 2, 1), ("a", 1, 1)]
+    assert [(r.cum_lo_fp, r.cum_hi_fp) for r in rows] == [(0, 6), (6, 8), (8, 10)]
+
+
 def test_negative_sampling_flattens_skew(spark):
     """alpha=3/4 compresses the dynamic range: the heavy token's share of
     the table is strictly below its share of the raw counts."""

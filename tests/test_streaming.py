@@ -1057,32 +1057,6 @@ def test_cep_absence_checkpoint_resume_no_duplicates(spark, tmp_path):
     assert len(s) > 0
 
 
-def test_streaming_bpe_counts_match_batch(spark, pages_dir, tmp_path):
-    """foreachBatch operator reuse: streaming per-page BPE token counts
-    must equal the batch operator over the same pages, regardless of how
-    the stream was micro-batched."""
-    from fasta_windows_spark.functions.bpe import bpe_token_counts
-
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    stream = S.read_pages_stream(spark, pages_dir, max_files_per_trigger=2)
-    q = S.write_bpe_token_counts_stream(stream, out, ck)
-    q.awaitTermination(180)
-
-    got = {
-        (r.doc_id, r.n_pretokens, r.n_bpe_tokens)
-        for r in spark.read.parquet(out).collect()
-    }
-    batch = bpe_token_counts(
-        spark.read.parquet(pages_dir).select(
-            F.col("url").alias("doc_id"), "text"
-        )
-    )
-    want = {
-        (r.doc_id, r.n_pretokens, r.n_bpe_tokens) for r in batch.collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_window_stats_counts_utf8_bytes(spark):
     """The unit of length, pinned end to end: window_stats windows text by
     UTF-8 BYTES (the reference's u8 contract, seq_statsu8.rs), not by
@@ -1108,57 +1082,6 @@ def test_window_stats_counts_utf8_bytes(spark):
         assert list(r.k4_vec) == list(w["tetra_freq"])
         for c in ("gc_prop", "prop_masked", "shannon_entropy", "dinuc_shannon", "kt0"):
             assert getattr(r, c) == pytest.approx(w[c], abs=1e-9), c
-
-
-def test_streaming_token_sketch_equals_batch_cms(spark, pages_dir, pages_pdf, tmp_path):
-    """Counter cells are additive, so the streamed per-window count-min
-    table must EQUAL the batch windowed sketch cell-for-cell — and slicing
-    one window out of it must estimate >= every token's exact count in
-    that window (the sketch's one-sided guarantee, via cms_estimates)."""
-    from fasta_windows_spark.operators.sketch import cms_estimates
-
-    out, ckpt = str(tmp_path / "cms_out"), str(tmp_path / "cms_ck")
-    q = S.write_exactly_once(
-        S.window_token_sketch(S.read_pages_stream(spark, pages_dir)), out, ckpt
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["w_start"], r["row"], r["bucket"]): r["cnt"]
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got
-
-    batch = P.spark_pages(spark, pages_pdf)
-    want = {
-        (r["w_start"], r["row"], r["bucket"]): r["cnt"]
-        for r in S.window_token_sketch(batch).collect()
-    }
-    # append mode withholds windows the final watermark hasn't closed, so
-    # compare every EMITTED cell (the HLL-twin protocol); emitted windows
-    # must be complete, cell-for-cell
-    for k, v in got.items():
-        assert want[k] == v, (k, v, want[k])
-    emitted_windows = {k[0] for k in got}
-    assert emitted_windows  # and nothing from an emitted window is missing
-    assert {k for k in want if k[0] in emitted_windows} == set(got)
-
-    # probe the earliest window's sketch against that window's exact counts
-    w0 = min(k[0] for k in got)
-    sk = spark.createDataFrame(
-        [(r, b, c) for (w, r, b), c in got.items() if w == w0],
-        ["row", "bucket", "cnt"],
-    )
-    in_w0 = batch.where(
-        F.window("warc_ts", "10 minutes").start == F.lit(w0).cast("timestamp")
-    )
-    exact = (
-        in_w0.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").cast("long").alias("exact_cnt"))
-    )
-    j = cms_estimates(exact, sk).join(exact, "tok").toPandas()
-    assert len(j) > 0
-    assert (j.est_cnt >= j.exact_cnt).all()
 
 
 def test_scd2_stream_matches_batch_closed_intervals(spark, tmp_path):
@@ -1311,71 +1234,6 @@ def test_sink_snapshot_time_travel(spark, tmp_path):
     assert [
         S.read_sink_snapshot(spark, out, b).count() for b in batches
     ] == counts
-
-
-def test_streaming_pq_encode_matches_batch(spark, tmp_path):
-    """Online index ingest: PQ codes computed on a stream of embeddings
-    under offline-fitted tables must equal the batch encoder row-for-row
-    (the encode is narrow column arithmetic — no state, no shuffle)."""
-    from fasta_windows_spark.operators.cluster import pq_encode_with, pq_fit
-
-    src = "/root/testdata/sf0.001/embeddings.parquet"
-    emb = spark.read.parquet(src)
-    centroids, books = pq_fit(emb, k=8, n_iter=1, m=8, ks=16, pq_iter=1)
-    want = {
-        tuple(r) for r in pq_encode_with(emb, centroids, books, 8).collect()
-    }
-
-    import shutil
-
-    stream_src = str(tmp_path / "emb_src")
-    os.makedirs(stream_src)
-    shutil.copy(src, os.path.join(stream_src, "part-0000.parquet"))
-    stream = spark.readStream.schema(emb.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(stream_src)
-    out, ck = str(tmp_path / "pq_out"), str(tmp_path / "pq_ck")
-    q = S.write_exactly_once(
-        S.encode_embeddings_stream(stream, centroids, books, 8), out, ck
-    )
-    q.awaitTermination(120)
-    got = {tuple(r) for r in spark.read.parquet(out).collect()}
-    assert got == want and got
-
-
-def test_streaming_lang_id_matches_batch(spark, pages_dir, pages_pdf, tmp_path):
-    """In-stream classification with offline-trained profiles must equal
-    the batch classifier on the same pages, and replaying a batch must not
-    duplicate rows (batch_id overwrite idempotence)."""
-    from fasta_windows_spark.functions.text import (
-        char_ngram_profiles,
-        classify_rank_profile,
-    )
-
-    batch = P.spark_pages(spark, pages_pdf)
-    labelled = batch.select("lang", "text")
-    profiles_rows = [
-        (r.lang, r.gram, r.rank)
-        for r in char_ngram_profiles(labelled, n=3, top=32).collect()
-    ]
-    prof = spark.createDataFrame(profiles_rows, ["lang", "gram", "rank"])
-    want = {
-        (r.url, r.pred_lang, r.dist)
-        for r in classify_rank_profile(
-            batch.select("url", "text"), prof, n=3, top=32, id_col="url"
-        ).collect()
-    }
-
-    out, ck = str(tmp_path / "lid_out"), str(tmp_path / "lid_ck")
-    q = S.write_lang_id_stream(
-        S.read_pages_stream(spark, pages_dir, max_files_per_trigger=2),
-        profiles_rows, out, ck, n=3, top=32,
-    )
-    q.awaitTermination(120)
-    got_df = spark.read.parquet(out)
-    got = {(r.url, r.pred_lang, r.dist) for r in got_df.collect()}
-    assert got == want and got
-    assert got_df.count() == len(got), "duplicate classifications"
 
 
 def test_sink_snapshot_refuses_unknown_batch(spark, tmp_path):
