@@ -63,8 +63,9 @@ pages = S.read_pages_stream(spark, src)
 if mode == "entropy":
     # entropy-mode analog (entropy.rs:123-136): 6-bin entropy + CTW depth 6
     # per positional window — CPU-bound (the reference's expensive op)
-    from fasta_windows_spark.functions.udfs import ctw_udf_frame
-    ws = ctw_udf_frame(S.with_host(pages), window=1000, id_cols=["host", "warc_ts"])
+    from fasta_windows_spark.functions.udfs import window_stats
+    ws = window_stats(S.with_host(pages), id_cols=["host", "warc_ts"], window=1000,
+                      fields=["entropy6"], with_ctw=True)
     win_len = F.col("w_end") - F.col("w_start")
     agg = (
         ws.withWatermark("warc_ts", "10 minutes")
@@ -132,6 +133,10 @@ def tree_times():
 
 out = spark.read.parquet(os.path.join(run_dir, "out"))
 n_agg_rows = out.count()
+if n_agg_rows == 0:
+    spark.stop()
+    from bench_scaling import empty_sink_error
+    sys.exit(empty_sink_error())
 n_windows = out.agg(F.sum("n_windows")).collect()[0][0]
 total_chars = out.agg(F.sum("total_chars")).collect()[0][0]
 _cpu, _blkio, _runq = tree_times()
@@ -148,6 +153,24 @@ print(json.dumps({{k: v for k, v in res.items() if k != "progress"}}))
 """
 
 
+# gen_corpus stamps pages one event-time second apart from this epoch second
+BASE_TS = 1_700_000_000
+
+
+def empty_sink_error(n_files: int = 64) -> str:
+    """Why a run's sink came out empty, with the fewest gen_corpus pages
+    that fill it: the first 10-minute window is written once the watermark
+    (latest event time minus 10 minutes) reaches the window's end."""
+    first_end = BASE_TS - BASE_TS % 600 + 600
+    span = first_end + 600 - BASE_TS + 1  # seconds, i.e. pages
+    pages = -(-span // n_files) * n_files  # gen_corpus writes n_files equal files
+    return (
+        "no 10-minute window closed, so the sink is empty: the corpus stamps "
+        "pages one event-time second apart and spans too few seconds; run "
+        f"with --pages >= {pages}"
+    )
+
+
 def gen_corpus(n_pages: int, page_bytes: int, n_files: int = 64) -> str:
     """Deterministic ACGTN corpus, cached by parameters."""
     import numpy as np
@@ -160,7 +183,6 @@ def gen_corpus(n_pages: int, page_bytes: int, n_files: int = 64) -> str:
     os.makedirs(src, exist_ok=True)
     alpha = np.frombuffer(b"ACGT", dtype=np.uint8)
     per_file = n_pages // n_files
-    base_ts = 1_700_000_000
     rng = np.random.default_rng(42)
     for f in range(n_files):
         codes = rng.integers(0, 4, size=per_file * page_bytes, dtype=np.uint8)
@@ -172,7 +194,7 @@ def gen_corpus(n_pages: int, page_bytes: int, n_files: int = 64) -> str:
         hosts = rng.integers(0, 500, size=per_file)
         hot = rng.random(per_file) < 0.3  # 30% of pages on 5 hot hosts (skew)
         hosts[hot] = rng.integers(0, 5, size=int(hot.sum()))
-        ts = base_ts + f * per_file + np.arange(per_file)
+        ts = BASE_TS + f * per_file + np.arange(per_file)
         pdf = pd.DataFrame(
             {
                 "url": [
@@ -372,7 +394,8 @@ def run_level(cores: int, src: str, mode: str = "entropy") -> dict:
     proc = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)
     if proc.returncode != 0:
         print(proc.stderr[-4000:], file=sys.stderr)
-        raise RuntimeError(f"run at local[{cores}] failed")
+        last = proc.stderr.strip().rsplit("\n", 1)[-1]
+        raise RuntimeError(f"run at local[{cores}] failed: {last}")
     # tree_cpu_s comes from the runner itself (a /proc walk over live
     # descendants before teardown — the Python kernel workers' CPU that
     # neither executor metrics nor RUSAGE_CHILDREN can see)

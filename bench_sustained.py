@@ -54,6 +54,10 @@ q.awaitTermination(1100)
 wall = time.perf_counter() - t0
 out = spark.read.parquet(os.path.join(run_dir, "out"))
 n_agg = out.count()
+if n_agg == 0:
+    spark.stop()
+    from bench_scaling import empty_sink_error
+    sys.exit(empty_sink_error())
 n_windows = int(out.agg(F.sum("n_windows")).collect()[0][0])
 chars = int(out.agg(F.sum("total_chars")).collect()[0][0])
 batches = listener.summary()["batches"]
@@ -87,7 +91,8 @@ def run_once(pages: int, changelog: bool) -> dict:
     )
     if proc.returncode != 0:
         print(proc.stderr[-4000:], file=sys.stderr)
-        raise RuntimeError("sustained run failed")
+        last = proc.stderr.strip().rsplit("\n", 1)[-1]
+        raise RuntimeError(f"sustained run failed: {last}")
     res = json.loads(proc.stdout.strip().splitlines()[-1])
     res["changelog"] = changelog
     return res

@@ -5,15 +5,18 @@ Flag parity:
                     also applies under --streaming
   -s/--step         step size (sliding windows; tumbling when omitted —
                     generalizes the reference's tumbling-only -w)
-  -m/--masked       masked-mode counting (seq_statsu8.rs:50-58)
+  -m/--masked       masked-mode counting (seq_statsu8.rs:50-58); under -e,
+                    the 6-bin entropy counts only uppercase ACGTN
+                    (entropy.rs:49-57)
   -d/--description  include the description column (fw.rs:235-240)
   -c/--ctw          compute CTW bits/base (fw.rs:91-95, expensive)
   -e/--entropy      entropy-only fast mode -> BED output (entropy.rs:86)
   --streaming       consume the input directory as a stream: -w byte
                     windows per page -> watermarked 10-minute (window,
                     host) counts in bytes -> exactly-once sink
-                    (streaming/pipeline.host_window_stats); -s/-m/-d/-c/-e
-                    do not apply
+                    (streaming/pipeline.host_window_stats); -s, -m, -d,
+                    -c, -e, --id-col and --text-col do not apply and are
+                    refused (exit 2)
 
 Usage (local):  python -m fasta_windows_spark.cli -f pages_parquet_dir -o out
 Cluster:        spark-submit --py-files fasta_windows_spark.zip \
@@ -93,16 +96,31 @@ def main(argv=None) -> int:
 
     from .session import get_spark
 
-    if args.streaming and _input_format(args) in ("fasta", "warc"):
-        # the streaming path re-reads the input as a parquet pages stream;
-        # silently ignoring the format flag would fail confusingly downstream
-        print(
-            "error: --streaming supports only the parquet pages schema "
-            f"({_input_format(args).upper()} input is batch-only; convert "
-            "to parquet pages first)",
-            file=sys.stderr,
-        )
-        return 2
+    if args.streaming:
+        # the streaming path re-reads the input as a parquet pages stream
+        # and counts tumbling -w windows of `text` per host; a format or a
+        # flag it would silently ignore is refused instead
+        if _input_format(args) in ("fasta", "warc"):
+            print(
+                "error: --streaming supports only the parquet pages schema "
+                f"({_input_format(args).upper()} input is batch-only; convert "
+                "to parquet pages first)",
+                file=sys.stderr,
+            )
+            return 2
+        ignored = [flag for flag, given in (
+            ("-s", args.step is not None), ("-m", args.masked),
+            ("-d", args.description), ("-c", args.ctw), ("-e", args.entropy),
+            ("--id-col", args.id_col is not None),
+            ("--text-col", args.text_col != "text"),
+        ) if given]
+        if ignored:
+            print(
+                "error: --streaming counts tumbling -w windows of the pages' "
+                f"text per host; it does not take {', '.join(ignored)}",
+                file=sys.stderr,
+            )
+            return 2
 
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(app_name="fasta-windows-spark-cli", master=args.master)
@@ -152,14 +170,16 @@ def main(argv=None) -> int:
         # partition at a time, never the whole result (a 100 TB corpus'
         # window table would OOM any collect); the default mode's TSV text
         # is formatted from Arrow on the executors.
+        from .functions.udfs import window_stats
+
         if args.entropy:
             # fast path: entropy + CTW only (main.rs:90-95, entropy.rs:86-156)
-            from .functions.udfs import ctw_udf_frame
             from .sink_tsv import write_entropy_bed
 
-            got = sorted_by_id(df, id_col, lambda d: ctw_udf_frame(
+            got = sorted_by_id(df, id_col, lambda d: window_stats(
                 d, text_col=args.text_col, id_cols=[id_col],
-                window=args.window_size, step=args.step,
+                window=args.window_size, step=args.step, masked=args.masked,
+                fields=["entropy6"], with_ctw=True,
             ))
             rows = (
                 dict(id=r[id_col], start=r["w_start"], end=r["w_end"],
@@ -170,7 +190,6 @@ def main(argv=None) -> int:
             print(f"[+]\tOutput written to: {path}")
             return 0
 
-        from .functions.udfs import window_stats
         from .sink_tsv import DESC_COL, export_reference_tsvs
 
         # -d carries the FASTA description through the kernel; inputs

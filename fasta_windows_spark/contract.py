@@ -18,7 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .functions.udfs import window_stats, ctw_udf_frame
+from .functions.udfs import window_stats
 from .kernels import kmer_names
 from .session import widen_scan
 
@@ -631,9 +631,9 @@ def doc_windows_stats(spark, sf_dir):
 def doc_windows_ctw(spark, sf_dir):
     """A12: CTW depth-6 compressibility per window (kmeru8.rs:170-319) — the
     entropy-mode BED analog (entropy.rs:123-136). Not ANSI-SQL-expressible."""
-    return ctw_udf_frame(
-        _docs(spark, sf_dir), window=W, id_cols=["doc_id"]
-    ).select("doc_id", "w_start", "w_end", _r6("entropy6").alias("entropy6"), _r6("ctw").alias("ctw"))
+    return _ws(spark, sf_dir, fields=["entropy6"], with_ctw=True).select(
+        "doc_id", "w_start", "w_end", _r6("entropy6").alias("entropy6"), _r6("ctw").alias("ctw")
+    )
 
 
 @q(
@@ -657,12 +657,12 @@ FROM k
 )
 def doc_windows_ctw0(spark, sf_dir):
     """A12 entry-path pin: CTW at depth 0 degenerates to the KT0 closed form
-    (kmeru8.rs:171-173, reference test kmeru8.rs:415-422), so the CTW UDF
-    frame — the same mapInPandas plumbing `doc_windows_ctw` (depth 6) runs
-    through — gets an independent DuckDB-oracle-checked row via the lgamma
-    identity already proven for `doc_windows_kt0`."""
-    return ctw_udf_frame(
-        _docs(spark, sf_dir), window=W, id_cols=["doc_id"], max_depth=0
+    (kmeru8.rs:171-173, reference test kmeru8.rs:415-422), so the CTW column
+    of `window_stats` — the same call `doc_windows_ctw` makes, differing
+    only in ``ctw_depth`` — gets an independent DuckDB-oracle-checked row
+    via the lgamma identity already proven for `doc_windows_kt0`."""
+    return _ws(
+        spark, sf_dir, fields=["entropy6"], with_ctw=True, ctw_depth=0
     ).select("doc_id", "w_start", "w_end", _r6("ctw").alias("ctw0"))
 
 

@@ -16,10 +16,7 @@ parquet scan never reads unused columns (e.g. the `html` binary).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 import pyspark.sql.types as T
@@ -29,6 +26,7 @@ from ..kernels import (
     KMER_KS,
     KMER_STAT_K,
     batch_window_stats_concat_sliding,
+    ctw_bits_per_base_many,
     hist_counts,
     stats_table,
 )
@@ -206,6 +204,7 @@ def window_stats(
     with_vectors: bool = False,
     f32: bool = True,
     fields: list | None = None,
+    ctw_depth: int = 6,
 ) -> DataFrame:
     """Explode `df` into positional windows of `text_col` with all statistics.
 
@@ -223,6 +222,13 @@ def window_stats(
     alone (``win_len``/``cnt_*``, or no field) come straight from the byte
     histograms with no finisher, and the finisher computes only the
     requested statistics.
+
+    ``with_ctw`` adds a ``ctw`` column: CTW bits/base at ``ctw_depth`` (6 is
+    the reference's -c and entropy mode; 0 is the KT0 closed form). It runs
+    once per emitted slice of windows, not inside the kernel: the lockstep
+    coder's per-call overhead then spreads over thousands of windows
+    instead of one 32 KiB chunk's few dozen. Entropy mode is
+    ``fields=["entropy6"], with_ctw=True``.
 
     The text column's Arrow layout (one concatenated UTF-8 buffer +
     offsets) feeds the kernel ZERO-COPY, skipping pandas/Python-string
@@ -252,20 +258,17 @@ def window_stats(
     if with_vectors:
         EMIT_MAX_WINDOWS = min(EMIT_MAX_WINDOWS, (2**31 - 1) // 4 ** max(ks))
 
-    def emit(full_batch, parts):
+    def emit(full_batch, fdata, row_offsets, parts):
         # concatenate per-chunk kernel outputs, run the vectorized finisher
-        # (or, for counts alone, the histogram column sums) ONCE over each
-        # bounded row-slice, build Arrow arrays once per slice — per-chunk
-        # Python/Arrow overhead stays amortized while the kernel itself
-        # runs on L2-resident chunks
+        # (or, for counts alone, the histogram column sums) and CTW ONCE
+        # over each bounded row-slice, build Arrow arrays once per slice —
+        # per-chunk Python/Arrow overhead stays amortized while the kernel
+        # itself runs on L2-resident chunks
         doc_idx = np.concatenate([r0 + p[0] for r0, p in parts])
         starts = np.concatenate([p[1] for _, p in parts])
         ends = np.concatenate([p[2] for _, p in parts])
         hists = np.vstack([p[3] for _, p in parts])
         kvecs = {k: np.vstack([p[4][k] for _, p in parts]) for k in ks}
-        ctw = (
-            np.concatenate([p[5] for _, p in parts]) if with_ctw else None
-        )
         for s0 in range(0, len(starts), EMIT_MAX_WINDOWS):
             s1 = min(s0 + EMIT_MAX_WINDOWS, len(starts))
             sl_kvecs = {k: kvecs[k][s0:s1] for k in ks}
@@ -298,7 +301,13 @@ def window_stats(
                     )
                 names.append(name)
             if with_ctw:
-                arrays.append(pa.array(ctw[s0:s1], pa.float64(), from_pandas=True))
+                # window bytes straight from the batch's text buffer
+                base = row_offsets[doc_idx[s0:s1]]
+                lo, hi = (base + starts[s0:s1]).tolist(), (base + ends[s0:s1]).tolist()
+                wins = [fdata[a:b] for a, b in zip(lo, hi)]
+                arrays.append(
+                    pa.array(ctw_bits_per_base_many(wins, ctw_depth), pa.float64())
+                )
                 names.append("ctw")
             if with_vectors:
                 n = s1 - s0
@@ -318,7 +327,7 @@ def window_stats(
     def trim_segment(res, keep: int, base: int):
         # owned windows are the first `keep` rows (start-ordered single doc);
         # shift positions from segment-local to doc coordinates
-        doc_idx, starts, ends, hists, kvecs, ctw = res
+        doc_idx, starts, ends, hists, kvecs = res
         sl = slice(0, keep)
         return (
             doc_idx[sl],
@@ -326,7 +335,6 @@ def window_stats(
             ends[sl] + base,
             hists[sl],
             {k: kvecs[k][sl] for k in ks},
-            ctw[sl] if with_ctw else None,
         )
 
     def compute(batches):
@@ -357,7 +365,6 @@ def window_stats(
                             flengths[run_start + r0 : run_start + r1],
                             window,
                             step,
-                            with_ctw=with_ctw,
                             ks=ks,
                         )
                         if len(res[1]) == 0:
@@ -366,7 +373,7 @@ def window_stats(
                         acc += b1 - b0
                         done = flush_maybe()
                         if done:
-                            yield from emit(full_batch, done)
+                            yield from emit(full_batch, fdata, row_offsets, done)
                 if i == len(flengths):
                     break
                 # oversized doc at row i
@@ -379,7 +386,6 @@ def window_stats(
                         np.array([b1 - b0], dtype=np.int64),
                         window,
                         step,
-                        with_ctw=with_ctw,
                         ks=ks,
                     )
                     res = trim_segment(res, owned, b0)
@@ -389,59 +395,9 @@ def window_stats(
                     acc += b1 - b0
                     done = flush_maybe()
                     if done:
-                        yield from emit(full_batch, done)
+                        yield from emit(full_batch, fdata, row_offsets, done)
                 run_start = i + 1
             if parts:
-                yield from emit(full_batch, parts)
+                yield from emit(full_batch, fdata, row_offsets, parts)
 
     return in_df.mapInArrow(compute, schema=schema)
-
-
-
-def ctw_udf_frame(
-    df: DataFrame,
-    text_col: str = "text",
-    id_cols: list | None = None,
-    window: int = 100,
-    step: int | None = None,
-    max_depth: int = 6,
-) -> DataFrame:
-    """Entropy-mode analog (entropy.rs:86-156): per-window 6-bin entropy + CTW
-    only — the fast path that skips all k-mer work (main.rs:90-95)."""
-    id_cols = id_cols or ["doc_id"]
-    in_df = df.select(*id_cols, text_col)
-    id_fields = [(c, in_df.schema[c].dataType) for c in id_cols]
-    schema = T.StructType(
-        [T.StructField(n, t) for n, t in id_fields]
-        + [
-            T.StructField("w_start", T.LongType()),
-            T.StructField("w_end", T.LongType()),
-            T.StructField("entropy6", T.DoubleType()),
-            T.StructField("ctw", T.DoubleType()),
-        ]
-    )
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import window_bounds, entropy6, ctw_bits_per_base_many
-
-        for pdf in batches:
-            rows = {c: [] for c in id_cols}
-            starts, ends, ents, wins = [], [], [], []
-            for i, text in enumerate(pdf[text_col].tolist()):
-                buf = (text or "").encode("utf-8")
-                for s, e in window_bounds(len(buf), window, step):
-                    for c in id_cols:
-                        rows[c].append(pdf[c].iloc[i])
-                    starts.append(s)
-                    ends.append(e)
-                    wins.append(buf[s:e])
-                    ents.append(entropy6(buf[s:e]))
-            out = pd.DataFrame(rows)
-            out["w_start"] = starts
-            out["w_end"] = ends
-            out["entropy6"] = ents
-            # window-vectorized CTW (lockstep across the whole batch)
-            out["ctw"] = ctw_bits_per_base_many(wins, max_depth)
-            yield out
-
-    return in_df.mapInPandas(compute, schema=schema)

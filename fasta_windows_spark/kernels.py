@@ -311,9 +311,10 @@ def ctw_bits_per_base(seq, max_depth: int = 6) -> float:
     Non-ACGT symbols are skipped AND flush the context (kmeru8.rs:296-299).
     Returns bits per effective base; depth 0 == KT0 (kmeru8.rs:171-173).
 
-    Sequential by construction; runs as a per-window Python loop inside an
-    Arrow batch (gate behind a config flag like the reference's -c,
-    main.rs:60-65)."""
+    Sequential by construction: the scalar reference for
+    :func:`ctw_bits_per_base_many`, which ``window_stats(with_ctw=True)``
+    runs once per emitted slice of windows (the reference's -c,
+    main.rs:60-65, and entropy mode)."""
     if max_depth == 0:
         return kt0_bits_per_base(seq)
 
@@ -635,7 +636,7 @@ def _kgram_codes(buf: np.ndarray, ks=KMER_KS) -> dict:
     return out
 
 
-def _concat_phase(buf, lengths, window, offset, period, with_ctw, ks, kcodes=None):
+def _concat_phase(buf, lengths, window, offset, period, ks, kcodes=None):
     """Windows of length `window` starting at offset + j*period within each
     doc of a PRE-CONCATENATED byte buffer with per-document lengths (the
     Arrow string column layout: data buffer + offsets). period >= window,
@@ -652,7 +653,7 @@ def _concat_phase(buf, lengths, window, offset, period, with_ctw, ks, kcodes=Non
     ``()`` included (byte histograms only).
 
     Returns (doc_idx, starts, ends, hists[nwin,256], kvecs{k: [nwin,4^k]}
-    for k in ks, ctw[nwin] or None)."""
+    for k in ks)."""
     buf = np.asarray(buf, dtype=np.uint8)
     lengths = np.asarray(lengths, dtype=np.int64)
     n_docs = len(lengths)
@@ -674,7 +675,6 @@ def _concat_phase(buf, lengths, window, offset, period, with_ctw, ks, kcodes=Non
             ends,
             np.zeros((0, 256), dtype=np.int64),
             {k: np.zeros((0, 4**k), dtype=np.int64) for k in ks},
-            np.zeros(0) if with_ctw else None,
         )
 
     # window ids and bincount keys are int32 throughout (one Arrow batch is
@@ -732,21 +732,10 @@ def _concat_phase(buf, lengths, window, offset, period, with_ctw, ks, kcodes=Non
             total_wins, 4**k
         )
 
-    ctw = None
-    if with_ctw:
-        doc_starts_full = np.concatenate([[0], np.cumsum(lengths)])
-        slices = []
-        for w in range(total_wins):
-            base = int(doc_starts_full[int(doc_idx[w])])
-            slices.append(buf[base + int(starts[w]) : base + int(ends[w])])
-        ctw = ctw_bits_per_base_many(slices, 6)
-
-    return doc_idx, starts, ends, hists, kvecs, ctw
+    return doc_idx, starts, ends, hists, kvecs
 
 
-def batch_window_stats_concat_sliding(
-    buf, lengths, window, step, with_ctw=False, ks=KMER_KS
-):
+def batch_window_stats_concat_sliding(buf, lengths, window, step, ks=KMER_KS):
     """The production window kernel: every window of every doc in a
     concatenated buffer (see :func:`_concat_phase` for the layout and the
     return shape), in window_bounds order (doc, start).
@@ -759,12 +748,12 @@ def batch_window_stats_concat_sliding(
     step > window (gapped sampling windows) too. Only the k-mer orders in
     `ks` are built; ``ks=()`` leaves the byte histograms alone."""
     if step is None or step == window:
-        return _concat_phase(buf, lengths, window, 0, window, with_ctw, ks)
+        return _concat_phase(buf, lengths, window, 0, window, ks)
     K = max(1, -(-window // step))  # ceil
     period = K * step
     kcodes = _kgram_codes(np.asarray(buf, dtype=np.uint8), ks)  # once, not per phase
     parts = [
-        _concat_phase(buf, lengths, window, g * step, period, with_ctw, ks, kcodes)
+        _concat_phase(buf, lengths, window, g * step, period, ks, kcodes)
         for g in range(K)
     ]
     doc_idx = np.concatenate([p[0] for p in parts])
@@ -773,8 +762,7 @@ def batch_window_stats_concat_sliding(
     order = np.lexsort((starts, doc_idx))
     hists = np.vstack([p[3] for p in parts])[order]
     kvecs = {k: np.vstack([p[4][k] for p in parts])[order] for k in ks}
-    ctw = np.concatenate([p[5] for p in parts])[order] if with_ctw else None
-    return doc_idx[order], starts[order], ends[order], hists, kvecs, ctw
+    return doc_idx[order], starts[order], ends[order], hists, kvecs
 
 
 _FOLD_PAIRS = [(ord(c), ord(c) - 32) for c in "acgtn"]  # lower -> upper
@@ -951,7 +939,7 @@ def stats_table(
     return {k: out[k] for k in STATS_TABLE_KEYS if k in want}
 
 
-def page_window_stats(text, window: int, step: int | None = None, masked: bool = False, with_ctw: bool = False):
+def page_window_stats(text, window: int, step: int | None = None, masked: bool = False):
     """Independent per-window reference: a list of per-window stat dicts,
     one scalar-kernel call per window over :func:`window_bounds` — shares
     no code with the batch kernel, so tests and the TSV gate check the
@@ -965,8 +953,6 @@ def page_window_stats(text, window: int, step: int | None = None, masked: bool =
         )
         st["start"] = s
         st["end"] = e
-        if with_ctw:
-            st["ctw"] = ctw_bits_per_base(win, 6)
         out.append(st)
     return out
 

@@ -42,7 +42,7 @@ def test_cli_export_streams_without_collect(tmp_path, spark, monkeypatch):
     pdf = P.gen_pages(n_pages=30, n_hosts=5, min_len=40, max_len=90, seed=3)
     P.write_pages_parquet(pdf, src, n_files=2)
 
-    from fasta_windows_spark.functions.udfs import ctw_udf_frame, window_stats
+    from fasta_windows_spark.functions.udfs import window_stats
     from fasta_windows_spark.sink_tsv import (
         df_windows_to_rows,
         write_entropy_bed,
@@ -58,7 +58,10 @@ def test_cli_export_streams_without_collect(tmp_path, spark, monkeypatch):
         df_windows_to_rows(ws.toPandas()), str(tmp_path / "exp"), "t",
         description=True, ctw=True,
     )
-    ent = ctw_udf_frame(df, text_col="text", id_cols=["url"], window=16).toPandas()
+    ent = window_stats(
+        df, text_col="text", id_cols=["url"], window=16, fields=["entropy6"],
+        with_ctw=True,
+    ).toPandas()
     ent = ent.sort_values(["url", "w_start"])
     exp_bed = write_entropy_bed(
         (dict(id=r["url"], start=r["w_start"], end=r["w_end"],
@@ -205,3 +208,71 @@ def test_cli_streaming_counts_utf8_bytes(tmp_path, spark, window):
     assert got.index.tolist() == want.index.tolist()
     assert (got.astype("int64").to_numpy() == want.astype("int64").to_numpy()).all(), (
         got, want)
+
+
+@pytest.mark.parametrize(
+    "flags", [["-m"], ["-s", "7"], ["-m", "-s", "7"]],
+    ids=["masked", "sliding", "masked_sliding"],
+)
+def test_cli_entropy_bed_honours_masked_and_step(tmp_path, spark, flags):
+    """-e prints, per -w/-s window of each page's UTF-8 bytes, the 6-bin
+    entropy (uppercase ACGTN only under -m, entropy.rs:49-57) and CTW
+    depth 6, matching an independent per-window recompute on mixed-case,
+    N-rich and non-ASCII pages."""
+    import pandas as pd
+
+    from fasta_windows_spark import cli
+    from fasta_windows_spark.kernels import ctw_bits_per_base, entropy6, window_bounds
+
+    pages = _BYTES_PAGES + [
+        ("https://d.example/1", 5, "NNNNNNNNnnnnACGTNNNNNNNNacgtNNNN" * 3),
+        ("https://d.example/2", 6, "nnnnNNNN" * 5 + "gattaca"),
+    ]
+    pdf = pd.DataFrame(
+        {
+            "url": [u for u, _, _ in pages],
+            "warc_ts": [pd.Timestamp("2024-01-01") + pd.Timedelta(minutes=m)
+                        for _, m, _ in pages],
+            "html": [b"x"] * len(pages),
+            "text": [t for _, _, t in pages],
+            "lang": ["en"] * len(pages),
+        }
+    )
+    src = str(tmp_path / "pages")
+    P.write_pages_parquet(pdf, src, n_files=2)
+    out_dir = str(tmp_path / "fw_out")
+    assert cli.main(["-f", src, "-o", "t", "-w", "16", "-e", *flags,
+                     "--out-dir", out_dir]) == 0
+
+    masked = "-m" in flags
+    step = int(flags[flags.index("-s") + 1]) if "-s" in flags else None
+    exp = []
+    for url, _, text in sorted(pages):
+        buf = text.encode()
+        for s, e in window_bounds(len(buf), 16, step):
+            exp.append(
+                f"{url}\t{s}\t{e}\t{entropy6(buf[s:e], masked=masked):.6f}\t"
+                f"{ctw_bits_per_base(buf[s:e], 6):.6f}"
+            )
+    assert open(os.path.join(out_dir, "t_entropy.bed")).read().splitlines() == exp
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [["-s", "5"], ["-m"], ["-d"], ["-c"], ["-e"], ["--text-col", "body"],
+     ["--id-col", "url"]],
+    ids=lambda f: f[0],
+)
+def test_cli_streaming_refuses_ignored_flags(tmp_path, capsys, flags):
+    """--streaming counts tumbling -w windows of `text` per host; a flag it
+    has no use for is refused with exit 2 before any sink is written."""
+    from fasta_windows_spark import cli
+
+    src = str(tmp_path / "pages")
+    P.write_pages_parquet(P.gen_pages(n_pages=20, n_hosts=2, seed=1), src, n_files=1)
+    out_dir = tmp_path / "fw_out"
+    rc = cli.main(["-f", src, "-o", "s", "--streaming", *flags,
+                   "--out-dir", str(out_dir)])
+    assert rc == 2
+    assert flags[0] in capsys.readouterr().err
+    assert not out_dir.exists()

@@ -155,7 +155,7 @@ def test_cli_export_plans_range_partition_below_kernel(spark, tmp_path,
 
     monkeypatch.setattr(DF, "toLocalIterator", record)
     out = str(tmp_path / "cli")
-    for flags, kernel in (([], "MapInArrow"), (["-e"], "MapInPandas")):
+    for flags in ([], ["-e"]):
         plans.clear()
         assert cli.main(["-f", pages_src, "-o", "t", "-w", str(W), *flags,
                          "--out-dir", out]) == 0
@@ -163,7 +163,7 @@ def test_cli_export_plans_range_partition_below_kernel(spark, tmp_path,
         plan = plans[0]
         assert plan.count("Exchange ") == 1, plan
         assert "Exchange rangepartitioning(url" in plan, plan
-        assert plan.index("Exchange ") > plan.rindex(kernel), plan
+        assert plan.index("Exchange ") > plan.rindex("MapInArrow"), plan
 
 
 def test_cli_integer_ids(spark, tmp_path):

@@ -49,7 +49,7 @@ def test_lockstep_ctw6_matches_committed_scalar_values(fixture):
 
 @pytest.mark.parametrize("fixture", FIXTURES)
 def test_driver_query_ctw6_matches_committed_scalar_values(fixture, spark):
-    """End-to-end: the contract query itself (mapInPandas over Spark) must
+    """End-to-end: the contract query itself (window_stats over Spark) must
     emit the committed values on BOTH corpora — including sf0.01, the one
     the driver's CORRECTNESS harness actually executes."""
     from fasta_windows_spark import contract

@@ -165,13 +165,13 @@ def test_stats_header_variants():
 
 def test_entropy_bed_format(spark, tmp_path, pages_pdf):
     """entropy-mode BED analog (entropy.rs:138-148): %.6f, input order."""
-    from fasta_windows_spark.functions.udfs import ctw_udf_frame
+    from fasta_windows_spark.functions.udfs import window_stats
     from fasta_windows_spark.sink_tsv import write_entropy_bed
     from fasta_windows_spark.kernels import entropy6, ctw_bits_per_base, window_bounds
 
     sdf = P.spark_pages(spark, pages_pdf)
     got = (
-        ctw_udf_frame(sdf, window=W, id_cols=["url"])
+        window_stats(sdf, window=W, id_cols=["url"], fields=["entropy6"], with_ctw=True)
         .orderBy("url", "w_start")
         .toPandas()
     )

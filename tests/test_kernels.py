@@ -241,19 +241,19 @@ def test_window_bounds_sliding():
     assert K.window_bounds(10, 4, 2) == [(0, 4), (2, 6), (4, 8), (6, 10), (8, 10)]
 
 
-def _concat_kernel(texts, window, step=None, with_ctw=False):
+def _concat_kernel(texts, window, step=None):
     """The production kernel over texts laid out as an Arrow string column
     (one concatenated byte buffer + per-doc lengths)."""
     bufs = [t.encode() for t in texts]
     lengths = np.array([len(b) for b in bufs], dtype=np.int64)
     buf = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    return K.batch_window_stats_concat_sliding(buf, lengths, window, step, with_ctw)
+    return K.batch_window_stats_concat_sliding(buf, lengths, window, step)
 
 
-def _assert_matches_scalar(texts, window, step=None, with_ctw=False):
+def _assert_matches_scalar(texts, window, step=None):
     """Every window of the production kernel == the scalar-path kernels on
     the same window_bounds slice, in (doc, start) order."""
-    doc_idx, starts, ends, hists, kvecs, ctw = _concat_kernel(texts, window, step, with_ctw)
+    doc_idx, starts, ends, hists, kvecs = _concat_kernel(texts, window, step)
     i = 0
     for d, t in enumerate(texts):
         buf = t.encode()
@@ -263,8 +263,6 @@ def _assert_matches_scalar(texts, window, step=None, with_ctw=False):
             assert np.array_equal(hists[i], K.byte_hist(win))
             for k in K.KMER_KS:
                 assert np.array_equal(kvecs[k][i], K.kmer_vector(win, k)), (d, s, k)
-            if with_ctw:
-                assert ctw[i] == pytest.approx(K.ctw_bits_per_base(win, 6), abs=1e-10)
             i += 1
     assert i == len(starts)
 
@@ -275,14 +273,14 @@ def test_batch_window_stats_matches_single():
 
 def test_batch_window_stats_no_cross_window_grams():
     # one doc, window=4: gram GT at positions 3-4 crosses the boundary -> excluded
-    _, _, _, _, kvecs, _ = _concat_kernel(["ACGTACGT"], 4)
+    _, _, _, _, kvecs = _concat_kernel(["ACGTACGT"], 4)
     per_window_sum = kvecs[2].sum(axis=1)
     assert list(per_window_sum) == [3, 3]  # 3 dinucs per 4-char window
 
 
 def test_batch_window_stats_no_cross_doc_grams():
     # two docs back to back: no gram spans the doc boundary
-    _, _, _, _, kvecs, _ = _concat_kernel(["AC", "GT"], 10)
+    _, _, _, _, kvecs = _concat_kernel(["AC", "GT"], 10)
     assert kvecs[2].sum() == 2  # AC and GT only, no CG bridge
 
 
@@ -319,7 +317,8 @@ def test_ctw_vectorized_matches_scalar():
 def test_sliding_concat_matches_reference_path():
     """Vectorized phase-decomposed sliding kernel == per-window scalar
     kernels over window_bounds, across non-divisible strides, gapped
-    (step > window), stride-1, dirty bytes, empty/short docs, and CTW."""
+    (step > window), stride-1, dirty bytes and empty/short docs (CTW
+    parity runs through window_stats: test_oversized_docs.py)."""
     rng = np.random.default_rng(3)
     alpha = np.frombuffer(b"ACGTNacgtnXW ", dtype=np.uint8)
 
@@ -327,15 +326,15 @@ def test_sliding_concat_matches_reference_path():
         return alpha[rng.integers(0, len(alpha), n)].tobytes().decode()
 
     cases = [
-        (["ACGTACGTAC", "", "A", "ACGT"], 4, 2, False),
-        ([rnd(137), rnd(3), rnd(0), rnd(55)], 10, 3, False),
-        ([rnd(100), rnd(7)], 5, 8, False),  # gapped: step > window
-        ([rnd(211)], 7, 1, False),  # stride 1
-        ([rnd(64), rnd(64)], 16, 4, True),  # ctw parity
-        ([rnd(1000) for _ in range(5)], 100, 30, False),
+        (["ACGTACGTAC", "", "A", "ACGT"], 4, 2),
+        ([rnd(137), rnd(3), rnd(0), rnd(55)], 10, 3),
+        ([rnd(100), rnd(7)], 5, 8),  # gapped: step > window
+        ([rnd(211)], 7, 1),  # stride 1
+        ([rnd(64), rnd(64)], 16, 4),
+        ([rnd(1000) for _ in range(5)], 100, 30),
     ]
-    for texts, W, s, with_ctw in cases:
-        _assert_matches_scalar(texts, W, s, with_ctw)
+    for texts, W, s in cases:
+        _assert_matches_scalar(texts, W, s)
 
 
 @pytest.mark.parametrize("step", [None, 3, 13], ids=["tumbling", "sliding", "gapped"])
@@ -367,7 +366,7 @@ def test_stats_table_keys_match_full(masked):
     texts = [b"ACGTacgtNNnnWSws" * 20, b"gggCCCaaaTTTxx" * 9, b"", b"AC"]
     lengths = np.array([len(t) for t in texts], dtype=np.int64)
     buf = np.frombuffer(b"".join(texts), dtype=np.uint8)
-    _, _, _, hists, kvecs, _ = K.batch_window_stats_concat_sliding(buf, lengths, 50, 20)
+    _, _, _, hists, kvecs = K.batch_window_stats_concat_sliding(buf, lengths, 50, 20)
     full = K.stats_table(hists, kvecs, masked=masked, f32=True)
     assert list(full) == list(K.STATS_TABLE_KEYS)
     for key in K.STATS_TABLE_KEYS:

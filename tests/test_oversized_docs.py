@@ -119,6 +119,68 @@ def test_oversized_doc_ctw_matches_whole(spark):
     assert np.allclose(arrow["ctw"], want, rtol=0, atol=1e-10)
 
 
+def _rnd_text(rng, n):
+    alpha = np.frombuffer(b"ACGTNacgtnXW ", dtype=np.uint8)
+    return alpha[rng.integers(0, len(alpha), n)].tobytes().decode()
+
+
+def _windows_in_order(docs, texts, **kw):
+    """window_stats over `docs` in (doc_id, w_start) order, with each row's
+    window bytes, checked against window_bounds."""
+    got = (
+        window_stats(docs, id_cols=["doc_id"], **kw)
+        .toPandas()
+        .sort_values(["doc_id", "w_start"])
+        .reset_index(drop=True)
+    )
+    wins = []
+    for doc_id, text in enumerate(texts):
+        buf = text.encode()
+        for s, e in window_bounds(len(buf), kw["window"], kw.get("step")):
+            wins.append((doc_id, s, e, buf[s:e]))
+    assert [w[:3] for w in wins] == list(
+        zip(got["doc_id"], got["w_start"], got["w_end"])
+    )
+    return got, [w[3] for w in wins]
+
+
+@pytest.mark.parametrize(
+    "window,step",
+    [(16, None), (16, 4), (16, 23), (1000, 700)],
+    ids=["tumbling", "sliding", "gapped", "oversized"],
+)
+def test_window_stats_ctw_matches_scalar(spark, window, step):
+    """Entropy mode (fields=["entropy6"], with_ctw=True): every window's ctw
+    equals the scalar coder and its entropy6 the scalar 6-bin entropy, on
+    dirty and non-ASCII docs and, at W=1000, a doc the oversized path
+    segments. CTW runs once per emitted slice over window bytes read back
+    from the batch's text buffer."""
+    rng = np.random.default_rng(3)
+    texts = [_rnd_text(rng, 64), _rnd_text(rng, 64), "", "é" + _rnd_text(rng, 40)]
+    if window == 1000:
+        texts = [_rnd_text(rng, OVERSIZE_DOC_BYTES + 3001)] + texts
+    got, wins = _windows_in_order(
+        _mk_docs(spark, texts), texts, window=window, step=step,
+        fields=["entropy6"], with_ctw=True,
+    )
+    assert list(got.columns) == ["doc_id", "w_start", "w_end", "entropy6", "ctw"]
+    want_ctw = np.array([K.ctw_bits_per_base(w, 6) for w in wins])
+    assert np.abs(got["ctw"].to_numpy() - want_ctw).max() <= 1e-10
+    want_ent = np.array([K.entropy6(w) for w in wins])
+    assert np.abs(got["entropy6"].to_numpy() - want_ent).max() <= 1e-12
+
+
+def test_window_stats_ctw_depth0_is_kt0(spark):
+    """ctw_depth=0 degenerates to the KT0 closed form (kmeru8.rs:171-173)."""
+    rng = np.random.default_rng(4)
+    texts = [_rnd_text(rng, 300), "acgtACGT" * 30, "NNNN", ""]
+    got, wins = _windows_in_order(
+        _mk_docs(spark, texts), texts, window=50, step=20, fields=[],
+        with_ctw=True, ctw_depth=0,
+    )
+    assert list(got["ctw"]) == [K.kt0_bits_per_base(w) for w in wins]
+
+
 # (fields, masked, with_vectors): counts alone, one k-mer order, a mix of
 # finisher families, vectors without scalars, and everything
 _FIELD_SETS = [

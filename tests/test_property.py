@@ -25,7 +25,7 @@ def _assert_kernel_matches_scalar(texts, w, step):
     bufs = [t.encode() for t in texts]
     lengths = np.array([len(b) for b in bufs], dtype=np.int64)
     buf = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    doc_idx, starts, ends, hists, kvecs, _ = K.batch_window_stats_concat_sliding(
+    doc_idx, starts, ends, hists, kvecs = K.batch_window_stats_concat_sliding(
         buf, lengths, w, step
     )
     i = 0
