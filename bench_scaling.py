@@ -489,6 +489,12 @@ def main():
     print("wrote BENCH/BASELINE.md", file=sys.stderr)
 
 
+def _pct(share) -> str:
+    """A gap share as a percentage; `gap_attribution` leaves the shares
+    None when the pair scaled super-linearly (no gap to explain)."""
+    return "n/a" if share is None else f"{share:.0%}"
+
+
 def write_baseline_md():
     """Regenerate BENCH/BASELINE.md from every recorded scaling mode."""
     import platform
@@ -572,16 +578,16 @@ nothing about the plan or data movement. The same work burned
 CPU-seconds at {r2["high"]["cores"]} cores (per-core busy-time inflation =
 stall/contention time, since the kernel scales 0.99 at these core counts
 when L2-resident), accounting for
-**{(ga.get("gap_explained_by_tree_cpu_inflation") or ga["gap_explained_by_cpu_inflation"]):.0%}
+**{_pct(ga.get("gap_explained_by_tree_cpu_inflation", ga["gap_explained_by_cpu_inflation"]))}
 of the gap**; single-threaded micro-batch machinery (trigger overhead +
 watermark-finalization batch, from the progress JSON) adds
 {ga.get("extra_serial_sec", "-")} s =
-{(ga.get("gap_explained_by_serial_machinery") or 0):.0%} more; RocksDB
+{_pct(ga.get("gap_explained_by_serial_machinery"))} more; RocksDB
 state commit (from the progress stream, mostly serial flush — overlaps
 the previous term only on non-first batches) inflates
 {ga.get("state_commit_sec", {}).get("low", "-")} ->
 {ga.get("state_commit_sec", {}).get("high", "-")} s =
-{(ga.get("gap_explained_by_state_commit") or 0):.0%} more. The remaining
+{_pct(ga.get("gap_explained_by_state_commit"))} more. The remaining
 non-busy waits are MEASURED, not guessed: extra runqueue wait (schedstat
 run-delay summed per task over the tree) is
 {ga.get("extra_runqueue_wait_sec", "-")} s — NEGATIVE means the high
@@ -590,9 +596,9 @@ contention does not explain any gap; block-I/O delay (delayacct) reads
 {ga.get("extra_blkio_wait_sec", "-")} s (delay accounting is disabled in
 this kernel when it reads exactly 0 at both levels). Executor-only
 views (JVM task threads, blind to Python workers): CPU
-+{ga["extra_cpu_sec"]} core-s ({ga["gap_explained_by_cpu_inflation"]:.0%}),
++{ga["extra_cpu_sec"]} core-s ({_pct(ga["gap_explained_by_cpu_inflation"])}),
 run time +{ga["extra_run_sec"]} core-s
-({ga["gap_explained_by_runtime_inflation"]:.0%}).
+({_pct(ga["gap_explained_by_runtime_inflation"])}).
 """
         sections.append(f"""## Mode: {mode}
 

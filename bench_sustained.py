@@ -44,7 +44,13 @@ from fasta_windows_spark.session import get_spark
 from fasta_windows_spark.streaming import pipeline as S
 from fasta_windows_spark.streaming.listener import ProgressCollector
 import pyspark.sql.functions as F
-spark = get_spark(app_name="fw-sustained", master="local[32]", shuffle_partitions=32)
+spark = get_spark(
+    app_name="fw-sustained", master="local[32]", shuffle_partitions=32,
+    extra_conf={{
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled":
+            {changelog!r},
+    }},
+)
 listener = ProgressCollector(); spark.streams.addListener(listener)
 t0 = time.perf_counter()
 agg = S.host_window_stats(S.read_pages_stream(spark, src), window_bytes=1000)
@@ -81,10 +87,9 @@ def run_once(pages: int, changelog: bool) -> dict:
     # (surfaces as FAILED_READ_FILE on a healthy file)
     env = dict(
         os.environ,
-        SPARK_ROCKSDB_CHANGELOG=str(changelog).lower(),
         SPARK_DRIVER_MEMORY=os.environ.get("SPARK_DRIVER_MEMORY", "48g"),
     )
-    code = RUNNER.format(repo=REPO, pages=pages)
+    code = RUNNER.format(repo=REPO, pages=pages, changelog=str(changelog).lower())
     proc = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
         timeout=1800, env=env,

@@ -251,7 +251,11 @@ _SQL_DNA_DOCS = (
 
 def _kmer_long(spark, sf_dir, k: int) -> DataFrame:
     src = _dna_docs(spark, sf_dir) if k == 4 else _docs(spark, sf_dir)
-    ws = window_stats(src, window=W, id_cols=["doc_id"], f32=False, with_vectors=True)
+    # the vectors alone: no scalar stat is read, so none is computed
+    ws = window_stats(
+        src, window=W, id_cols=["doc_id"], f32=False, with_vectors=True,
+        fields=[],
+    )
     # one parsed expression, not 4^k py4j F.lit roundtrips (256 calls
     # ~ 0.25 s of driver latency per plan build at k=4)
     names = F.expr(
@@ -361,7 +365,7 @@ def doc_windows_dinuc_oe(spark, sf_dir):
     (lexicographic row-major order, kernels.kmer_names)."""
     ws = window_stats(
         _dna_docs(spark, sf_dir), window=W, id_cols=["doc_id"], f32=False,
-        with_vectors=True,
+        with_vectors=True, fields=["cnt_a", "cnt_c", "cnt_g", "cnt_t"],
     )
     names = F.expr(
         "array(" + ",".join(f"'{s}'" for s in kmer_names(2)) + ")"
@@ -416,7 +420,7 @@ def doc_windows_trinuc_oe(spark, sf_dir):
     counted too)."""
     ws = window_stats(
         _dna_docs(spark, sf_dir), window=W, id_cols=["doc_id"], f32=False,
-        with_vectors=True,
+        with_vectors=True, fields=["cnt_a", "cnt_c", "cnt_g", "cnt_t"],
     )
     names = F.expr(
         "array(" + ",".join(f"'{s}'" for s in kmer_names(3)) + ")"

@@ -109,8 +109,6 @@ def _arrow_string_parts(col):
         import pyarrow.compute as pc
 
         col = pc.fill_null(col, "")
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
     off_dtype = np.int64 if pa.types.is_large_string(col.type) else np.int32
     offsets = np.frombuffer(col.buffers()[1], dtype=off_dtype)[
         col.offset : col.offset + len(col) + 1
@@ -139,20 +137,6 @@ CHUNK_TEXT_BYTES = 32 << 10
 EMIT_TEXT_BYTES = 4 << 20
 
 
-def _doc_chunks(lengths, target_bytes: int = CHUNK_TEXT_BYTES):
-    """Doc-aligned (row_start, row_end, byte_start, byte_end) chunks."""
-    out = []
-    r0 = b0 = acc = 0
-    for i, ln in enumerate(np.asarray(lengths)):
-        acc += int(ln)
-        if acc >= target_bytes:
-            out.append((r0, i + 1, b0, b0 + acc))
-            r0, b0, acc = i + 1, b0 + acc, 0
-    if acc or r0 < len(lengths):
-        out.append((r0, len(lengths), b0, b0 + acc))
-    return out
-
-
 # A doc longer than this is segmented into window-aligned sub-chunks so one
 # chromosome/book-scale row can't force a single kernel call whose transients
 # (~30x text bytes x window/step overlap factor) blow past the L2-resident
@@ -170,27 +154,44 @@ def _segment_starts_per_chunk(window: int, step: int, target_bytes: int) -> int:
     return m
 
 
-def _doc_segments(length: int, window: int, step: int, target_bytes: int):
-    """(byte_start, byte_end, n_owned_windows) segments of one oversized doc.
+def _kernel_calls(lengths, window: int, step: int | None,
+                  target_bytes: int = CHUNK_TEXT_BYTES):
+    """The kernel calls for one batch's rows, in row order, as
+    (row0, row1, byte_lo, byte_hi, owned); byte offsets index the batch's
+    concatenated text buffer.
 
-    Segment j owns window starts [j*m, (j+1)*m) (multiples of `step`); its
-    byte range extends `window` past the last owned start so every owned
-    window sees its full content. Fed to the kernel as a standalone doc, the
-    segment emits its owned windows FIRST (kernel output is start-ordered),
-    so the caller keeps the first n_owned rows and shifts starts/ends by
-    byte_start — bit-identical to running the whole doc in one call (the
-    tail segment's end-clamp coincides with the true doc end)."""
-    m = _segment_starts_per_chunk(window, step, target_bytes)
-    n_starts = -(-length // step)  # == len(window_bounds(length, ...))
-    out = []
-    j = 0
-    while j * m < n_starts:
-        owned = min((j + 1) * m, n_starts) - j * m
-        b0 = j * m * step
-        b1 = min((j * m + owned - 1) * step + window, length)
-        out.append((b0, b1, owned))
-        j += 1
-    return out
+    Rows up to OVERSIZE_DOC_BYTES are grouped whole: a call closes after
+    the row that brings it to ``target_bytes``, and ``owned`` is None (every
+    window of rows [row0, row1) is kept). A longer row is cut into
+    window-aligned segments, one call each, run as a standalone doc:
+    segment j owns window starts [j*m, (j+1)*m) (multiples of ``step``) and
+    its bytes extend ``window`` past the last owned start, so every owned
+    window sees its full content. The kernel emits a doc's windows in start
+    order, so the owned windows are the call's first ``owned`` rows, shifted
+    by the segment's offset into its row — bit-identical to one call over
+    the whole row (the tail segment's end-clamp is the true row end)."""
+    step = window if step is None else step
+    lengths = np.asarray(lengths).tolist()
+    calls = []
+    r0 = b0 = b = 0
+    for i, ln in enumerate(lengths):
+        if ln > OVERSIZE_DOC_BYTES:
+            if r0 < i:
+                calls.append((r0, i, b0, b, None))
+            m = _segment_starts_per_chunk(window, step, target_bytes)
+            n_starts = -(-ln // step)  # == len(window_bounds(ln, ...))
+            for j0 in range(0, n_starts, m):
+                owned = min(j0 + m, n_starts) - j0
+                hi = min((j0 + owned - 1) * step + window, ln)
+                calls.append((i, i + 1, b + j0 * step, b + hi, owned))
+            r0, b0 = i + 1, b + ln
+        elif b + ln - b0 >= target_bytes:
+            calls.append((r0, i + 1, b0, b + ln, None))
+            r0, b0 = i + 1, b + ln
+        b += ln
+    if r0 < len(lengths):
+        calls.append((r0, len(lengths), b0, b, None))
+    return calls
 
 
 def window_stats(
@@ -232,8 +233,10 @@ def window_stats(
 
     The text column's Arrow layout (one concatenated UTF-8 buffer +
     offsets) feeds the kernel ZERO-COPY, skipping pandas/Python-string
-    materialization entirely. Sliding windows run as ceil(window/step)
-    phase-shifted vectorized passes
+    materialization entirely. Each Arrow batch runs as one loop over its
+    kernel-call plan (:func:`_kernel_calls`: ~32 KiB groups of whole rows,
+    window-aligned segments of rows above OVERSIZE_DOC_BYTES). Sliding
+    windows run as ceil(window/step) phase-shifted vectorized passes
     (kernels.batch_window_stats_concat_sliding).
     """
     import pyarrow as pa
@@ -322,81 +325,39 @@ def window_stats(
                     names.append(f"k{k}_vec")
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    eff_step = step if step is not None else window
-
-    def trim_segment(res, keep: int, base: int):
-        # owned windows are the first `keep` rows (start-ordered single doc);
-        # shift positions from segment-local to doc coordinates
-        doc_idx, starts, ends, hists, kvecs = res
-        sl = slice(0, keep)
-        return (
-            doc_idx[sl],
-            starts[sl] + base,
-            ends[sl] + base,
-            hists[sl],
-            {k: kvecs[k][sl] for k in ks},
-        )
-
     def compute(batches):
         for full_batch in batches:
             ftext = full_batch.column(full_batch.schema.get_field_index(text_col))
             fdata, flengths = _arrow_string_parts(ftext)
-            parts, acc = [], 0
-
-            def flush_maybe():
-                nonlocal parts, acc
-                if acc >= EMIT_TEXT_BYTES:
-                    out, parts, acc = parts, [], 0
-                    return out
-                return None
-
-            # split rows into runs of normal docs (grouped chunks, as before)
-            # and oversized docs (window-aligned per-doc segments)
-            big_rows = set(np.nonzero(flengths > OVERSIZE_DOC_BYTES)[0].tolist())
             row_offsets = np.concatenate(([0], np.cumsum(flengths)))
-            run_start = 0
-            for i in list(sorted(big_rows)) + [len(flengths)]:
-                # normal run [run_start, i)
-                if i > run_start:
-                    base_b = int(row_offsets[run_start])
-                    for r0, r1, b0, b1 in _doc_chunks(flengths[run_start:i]):
-                        res = batch_window_stats_concat_sliding(
-                            fdata[base_b + b0 : base_b + b1],
-                            flengths[run_start + r0 : run_start + r1],
-                            window,
-                            step,
-                            ks=ks,
-                        )
-                        if len(res[1]) == 0:
-                            continue
-                        parts.append((run_start + r0, res))
-                        acc += b1 - b0
-                        done = flush_maybe()
-                        if done:
-                            yield from emit(full_batch, fdata, row_offsets, done)
-                if i == len(flengths):
-                    break
-                # oversized doc at row i
-                db0 = int(row_offsets[i])
-                for b0, b1, owned in _doc_segments(
-                    int(flengths[i]), window, eff_step, CHUNK_TEXT_BYTES
-                ):
-                    res = batch_window_stats_concat_sliding(
-                        fdata[db0 + b0 : db0 + b1],
-                        np.array([b1 - b0], dtype=np.int64),
-                        window,
-                        step,
-                        ks=ks,
+            parts, acc = [], 0
+            for r0, r1, lo, hi, owned in _kernel_calls(flengths, window, step):
+                lengths = (
+                    flengths[r0:r1] if owned is None
+                    else np.array([hi - lo], dtype=np.int64)
+                )
+                res = batch_window_stats_concat_sliding(
+                    fdata[lo:hi], lengths, window, step, ks=ks
+                )
+                if owned is not None:
+                    # a segment: keep its owned windows, shifted from
+                    # segment-local to doc coordinates
+                    base = lo - int(row_offsets[r0])
+                    doc_idx, starts, ends, hists, kvecs = res
+                    res = (
+                        doc_idx[:owned],
+                        starts[:owned] + base,
+                        ends[:owned] + base,
+                        hists[:owned],
+                        {k: v[:owned] for k, v in kvecs.items()},
                     )
-                    res = trim_segment(res, owned, b0)
-                    if len(res[1]) == 0:
-                        continue
-                    parts.append((i, res))
-                    acc += b1 - b0
-                    done = flush_maybe()
-                    if done:
-                        yield from emit(full_batch, fdata, row_offsets, done)
-                run_start = i + 1
+                if len(res[1]) == 0:
+                    continue
+                parts.append((r0, res))
+                acc += hi - lo
+                if acc >= EMIT_TEXT_BYTES:
+                    yield from emit(full_batch, fdata, row_offsets, parts)
+                    parts, acc = [], 0
             if parts:
                 yield from emit(full_batch, fdata, row_offsets, parts)
 

@@ -36,10 +36,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow is the Python<->JVM channel for every kernel UDF
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_ARROW_BATCH", "4096"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # Split granularity: a 100 TB table has ~10^6 128 MB splits, so scan
         # parallelism is never split-limited on a cluster; a sandbox corpus is
         # a few hundred MB and the same 128 MB bin-packing would collapse it
@@ -69,7 +66,7 @@ def get_spark(
         # time scaling with cluster size vs with actual state delta.
         .config(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            os.environ.get("SPARK_ROCKSDB_CHANGELOG", "true"),
+            "true",
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

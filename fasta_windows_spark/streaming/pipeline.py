@@ -288,6 +288,17 @@ def host_window_kmer_agg(
     )
 
 
+def _lang_join_cond(bound: str):
+    """Same host as the page (alias ``p``), detected (alias ``l``) within
+    +/- `bound` of its warc_ts: the time bound that lets the watermarks
+    evict stream-stream join state."""
+    return (
+        (F.col("p.host") == F.col("l.host"))
+        & (F.col("l.detect_ts") >= F.col("p.warc_ts") - F.expr(f"INTERVAL {bound}"))
+        & (F.col("l.detect_ts") <= F.col("p.warc_ts") + F.expr(f"INTERVAL {bound}"))
+    )
+
+
 def join_lang_stream(
     pages: DataFrame,
     lang: DataFrame,
@@ -300,12 +311,7 @@ def join_lang_stream(
     warc_ts. Watermarks on both sides bound the join state (RocksDB)."""
     p = with_host(pages).withWatermark("warc_ts", pages_watermark).alias("p")
     l = lang.withWatermark("detect_ts", lang_watermark).alias("l")
-    cond = (
-        (F.col("p.host") == F.col("l.host"))
-        & (F.col("l.detect_ts") >= F.col("p.warc_ts") - F.expr(f"INTERVAL {bound}"))
-        & (F.col("l.detect_ts") <= F.col("p.warc_ts") + F.expr(f"INTERVAL {bound}"))
-    )
-    return p.join(l, cond, "leftOuter").select(
+    return p.join(l, _lang_join_cond(bound), "leftOuter").select(
         F.col("p.url").alias("url"),
         F.col("p.warc_ts").alias("warc_ts"),
         F.col("p.host").alias("host"),
@@ -349,12 +355,7 @@ def north_star_stats_with_lang(
     `host_window_stats`."""
     counts = _window_counts(pages, _PAGE_WINDOW, pages_watermark).alias("p")
     l = lang.withWatermark("detect_ts", lang_watermark).alias("l")
-    cond = (
-        (F.col("p.host") == F.col("l.host"))
-        & (F.col("l.detect_ts") >= F.col("p.warc_ts") - F.expr(f"INTERVAL {bound}"))
-        & (F.col("l.detect_ts") <= F.col("p.warc_ts") + F.expr(f"INTERVAL {bound}"))
-    )
-    joined = counts.join(l, cond, "inner").select(
+    joined = counts.join(l, _lang_join_cond(bound), "inner").select(
         F.col("p.host").alias("host"),
         F.col("p.warc_ts").alias("warc_ts"),
         F.col("l.lang").alias("detected_lang"),

@@ -2,7 +2,9 @@
 OVERSIZE_DOC_BYTES is split into window-aligned sub-chunks with
 step-compatible overlap inside the Arrow kernel path, bounding per-call
 transients — output must equal the independent per-window reference
-(kernels.page_window_stats) on every window of the whole doc."""
+(kernels.page_window_stats) on every window of the whole doc. The kernel
+call plan (`_kernel_calls`) is checked Spark-free: across its calls, every
+row's kept windows are its window_bounds exactly once."""
 
 import numpy as np
 import pandas as pd
@@ -10,7 +12,7 @@ import pytest
 
 from fasta_windows_spark.functions.udfs import (
     OVERSIZE_DOC_BYTES,
-    _doc_segments,
+    _kernel_calls,
     window_stats,
 )
 from fasta_windows_spark import kernels as K
@@ -30,19 +32,72 @@ from fasta_windows_spark.kernels import window_bounds
 )
 def test_doc_segments_cover_all_windows_exactly(length, window, step):
     bounds = window_bounds(length, window, step)
-    segs = _doc_segments(length, window, step, target_bytes=32 << 10)
+    calls = _kernel_calls([length], window, step, target_bytes=32 << 10)
     rebuilt = []
-    for b0, b1, owned in segs:
+    for r0, r1, b0, b1, owned in calls:
+        assert (r0, r1) == (0, 1)
         assert 0 <= b0 < b1 <= length
         local = window_bounds(b1 - b0, window, step)
+        if owned is None:  # a row below the oversize cut runs whole
+            assert (b0, b1) == (0, length)
+            owned = len(local)
         # the owned windows are a prefix of the segment's local windows
         assert owned <= len(local)
         for s, e in local[:owned]:
             rebuilt.append((s + b0, e + b0))
         # non-tail segments must give every owned window its full content
         if b1 < length:
-            assert local[owned - 1][0] + window <= b1 - b0 + window
+            assert local[owned - 1][1] - local[owned - 1][0] == window
     assert rebuilt == bounds
+
+
+def _owned_windows(lengths, window, step, target_bytes):
+    """Each row's windows as the planned calls keep them, in doc
+    coordinates, with the grouped calls' byte spans checked on the way."""
+    offsets = np.concatenate(([0], np.cumsum(lengths))).tolist()
+    calls = _kernel_calls(lengths, window, step, target_bytes)
+    kept = {i: [] for i in range(len(lengths))}
+    for r0, r1, b0, b1, owned in calls:
+        assert r0 < r1 and b0 <= b1
+        if owned is None:
+            assert (b0, b1) == (offsets[r0], offsets[r1])
+            rows = lengths[r0:r1]
+            assert all(ln <= OVERSIZE_DOC_BYTES for ln in rows)
+            # a call closes on the row that reaches target_bytes
+            assert sum(rows[:-1]) < target_bytes
+            for i in range(r0, r1):
+                kept[i] += window_bounds(lengths[i], window, step)
+        else:
+            assert r1 == r0 + 1 and lengths[r0] > OVERSIZE_DOC_BYTES
+            assert offsets[r0] <= b0 < b1 <= offsets[r1]
+            base = b0 - offsets[r0]
+            local = window_bounds(b1 - b0, window, step)[:owned]
+            assert len(local) == owned
+            kept[r0] += [(s + base, e + base) for s, e in local]
+    # the calls visit the rows in order, each row in one grouped call or in
+    # consecutive segment calls
+    rows = [i for r0, r1, *_ in calls for i in range(r0, r1)]
+    assert [i for j, i in enumerate(rows) if j == 0 or rows[j - 1] != i] == list(
+        range(len(lengths))
+    )
+    return kept
+
+
+@pytest.mark.parametrize("window,step", [(1000, None), (1000, 250), (200, 1000)])
+def test_kernel_calls_mixed_rows(window, step):
+    """Oversized rows first, adjacent and last, zero-length rows between
+    grouped ones, and an empty batch: every row's kept windows are its
+    window_bounds, each exactly once and in order."""
+    big = OVERSIZE_DOC_BYTES
+    target = 32 << 10
+    rows = [
+        big + 1, 0, 5000, 30_000, 3000, 0, 0, big + 40_000, 3 * big + 17,
+        9000, 40_000, 0, 12_000, big + 999,
+    ]
+    for lengths in (rows, rows[1:-1], [0, 0, 0], [], [big + 5]):
+        kept = _owned_windows(lengths, window, step, target)
+        for i, ln in enumerate(lengths):
+            assert kept[i] == window_bounds(ln, window, step), (lengths, i)
 
 
 def _mk_docs(spark, texts):
