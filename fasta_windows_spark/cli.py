@@ -4,7 +4,8 @@ Flag parity:
   -w/--window_size  window size in UTF-8 bytes (default 1000, main.rs:28-35);
                     also applies under --streaming
   -s/--step         step size (sliding windows; tumbling when omitted —
-                    generalizes the reference's tumbling-only -w)
+                    generalizes the reference's tumbling-only -w); -w or
+                    -s below 1 is refused (exit 2)
   -m/--masked       masked-mode counting (seq_statsu8.rs:50-58); under -e,
                     the 6-bin entropy counts only uppercase ACGTN
                     (entropy.rs:49-57)
@@ -92,6 +93,9 @@ def sorted_by_id(df, id_col: str, frame_fn):
 
 def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
+    if args.window_size < 1 or (args.step is not None and args.step < 1):
+        print("error: -w/--window_size and -s/--step must be at least 1 byte", file=sys.stderr)
+        return 2
     from pyspark.sql import SparkSession
 
     from .session import get_spark
@@ -125,22 +129,6 @@ def main(argv=None) -> int:
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(app_name="fasta-windows-spark-cli", master=args.master)
     try:
-        if _input_format(args) == "fasta":
-            # the reference's native input (fw.rs:46-60): FASTA records as
-            # (doc_id=seq_id, description, text=seq)
-            from .sources.fasta import fasta_as_documents
-
-            df = fasta_as_documents(spark, args.input)
-        elif _input_format(args) == "warc":
-            # crawl-native input: WARC responses -> pages (url, text) so the
-            # window kernels run on the extracted page text
-            from .sources.warc import read_warc, warc_to_pages
-
-            df = warc_to_pages(read_warc(spark, args.input))
-        else:
-            df = spark.read.parquet(args.input)
-        id_col = args.id_col or ("url" if "url" in df.columns else "doc_id")
-
         if args.streaming:
             from .streaming import pipeline as S
 
@@ -161,6 +149,22 @@ def main(argv=None) -> int:
             q.awaitTermination()
             print(f"[+]\tStreaming output: {args.out_dir}/{args.output}_host_windows")
             return 0
+
+        if _input_format(args) == "fasta":
+            # the reference's native input (fw.rs:46-60): FASTA records as
+            # (doc_id=seq_id, description, text=seq)
+            from .sources.fasta import fasta_as_documents
+
+            df = fasta_as_documents(spark, args.input)
+        elif _input_format(args) == "warc":
+            # crawl-native input: WARC responses -> pages (url, text) so the
+            # window kernels run on the extracted page text
+            from .sources.warc import read_warc, warc_to_pages
+
+            df = warc_to_pages(read_warc(spark, args.input))
+        else:
+            df = spark.read.parquet(args.input)
+        id_col = args.id_col or ("url" if "url" in df.columns else "doc_id")
 
         # Export model (both modes): range-partition the PAGES by id, run
         # the kernel, sort windows within partitions — the reference's

@@ -25,46 +25,17 @@ from ..kernels import (
     COUNT_KEYS,
     KMER_KS,
     KMER_STAT_K,
+    STATS_TABLE_KEYS,
     batch_window_stats_concat_sliding,
     ctw_bits_per_base_many,
-    hist_counts,
     stats_table,
 )
 
-# scalar stats emitted per window (names are the queries()/oracle contract)
+# scalar stats emitted per window, in column order (names are the
+# queries()/oracle contract): counts are longs, everything else doubles
 SCALAR_FIELDS = [
-    ("win_len", T.LongType()),
-    ("cnt_a", T.LongType()),
-    ("cnt_c", T.LongType()),
-    ("cnt_g", T.LongType()),
-    ("cnt_t", T.LongType()),
-    ("cnt_n", T.LongType()),
-    ("gc_prop", T.DoubleType()),
-    ("gc_skew", T.DoubleType()),
-    ("at_skew", T.DoubleType()),
-    ("shannon_entropy", T.DoubleType()),
-    ("entropy6", T.DoubleType()),
-    ("prop_g", T.DoubleType()),
-    ("prop_c", T.DoubleType()),
-    ("prop_a", T.DoubleType()),
-    ("prop_t", T.DoubleType()),
-    ("prop_n", T.DoubleType()),
-    ("prop_masked", T.DoubleType()),
-    ("cpg_prop", T.DoubleType()),
-    ("dinuc_shannon", T.DoubleType()),
-    ("trinuc_shannon", T.DoubleType()),
-    ("tetranuc_shannon", T.DoubleType()),
-    ("kt0", T.DoubleType()),
+    (k, T.LongType() if k in COUNT_KEYS else T.DoubleType()) for k in STATS_TABLE_KEYS
 ]
-
-_STAT_KEY = {  # schema name -> stats_table key
-    "win_len": "len",
-    "cnt_a": "a",
-    "cnt_c": "c",
-    "cnt_g": "g",
-    "cnt_t": "t",
-    "cnt_n": "n",
-}
 
 
 def _scalar_fields(fields: list | None) -> list:
@@ -219,10 +190,13 @@ def window_stats(
     columns INSIDE a mapInArrow, so a downstream agg that needs 3 of the 22
     scalars would otherwise pay Arrow IPC for all 22 on every window. It
     also decides what is computed: the kernel builds only the k-mer orders
-    the requested fields read (all of them with ``with_vectors``), counts
-    alone (``win_len``/``cnt_*``, or no field) come straight from the byte
-    histograms with no finisher, and the finisher computes only the
-    requested statistics.
+    the requested fields read (all of them with ``with_vectors``), and one
+    finisher call per emitted slice (kernels.stats_table) computes exactly
+    the requested statistics — a count straight from the byte histograms,
+    a ratio or entropy only when it is asked for.
+
+    ``window`` and ``step`` (None = ``window``, tumbling) are at least 1;
+    anything smaller raises ValueError here, before any Spark job runs.
 
     ``with_ctw`` adds a ``ctw`` column: CTW bits/base at ``ctw_depth`` (6 is
     the reference's -c and entropy mode; 0 is the KT0 closed form). It runs
@@ -241,17 +215,17 @@ def window_stats(
     """
     import pyarrow as pa
 
+    if window < 1 or (step is not None and step < 1):
+        raise ValueError(f"window and step must be >= 1 byte, got window={window}, step={step}")
     id_cols = id_cols or ["doc_id"]
     in_df = df.select(*id_cols, text_col)
     id_fields = [(c, in_df.schema[c].dataType) for c in id_cols]
     schema = window_stats_schema(id_fields, with_ctw, with_vectors, fields)
-    emit_fields = _scalar_fields(fields)
-    stat_keys = [_STAT_KEY.get(n, n) for n, _ in emit_fields]
+    stat_keys = [n for n, _ in _scalar_fields(fields)]
     # the k-mer orders to build: what the vectors or requested stats read
     ks = KMER_KS if with_vectors else tuple(
         sorted({KMER_STAT_K[k] for k in stat_keys if k in KMER_STAT_K})
     )
-    counts_only = COUNT_KEYS.issuperset(stat_keys)
 
     # rows per output RecordBatch: 2M bounds the finisher's transient
     # matrices; with vectors, Arrow list offsets are int32, so a slice must
@@ -263,10 +237,9 @@ def window_stats(
 
     def emit(full_batch, fdata, row_offsets, parts):
         # concatenate per-chunk kernel outputs, run the vectorized finisher
-        # (or, for counts alone, the histogram column sums) and CTW ONCE
-        # over each bounded row-slice, build Arrow arrays once per slice —
-        # per-chunk Python/Arrow overhead stays amortized while the kernel
-        # itself runs on L2-resident chunks
+        # and CTW ONCE over each bounded row-slice, build Arrow arrays once
+        # per slice — per-chunk Python/Arrow overhead stays amortized while
+        # the kernel itself runs on L2-resident chunks
         doc_idx = np.concatenate([r0 + p[0] for r0, p in parts])
         starts = np.concatenate([p[1] for _, p in parts])
         ends = np.concatenate([p[2] for _, p in parts])
@@ -275,10 +248,7 @@ def window_stats(
         for s0 in range(0, len(starts), EMIT_MAX_WINDOWS):
             s1 = min(s0 + EMIT_MAX_WINDOWS, len(starts))
             sl_kvecs = {k: kvecs[k][s0:s1] for k in ks}
-            if counts_only:
-                st = hist_counts(hists[s0:s1], masked, stat_keys)
-            else:
-                st = stats_table(hists[s0:s1], sl_kvecs, masked, f32, keys=stat_keys)
+            st = stats_table(hists[s0:s1], sl_kvecs, masked, f32, keys=stat_keys)
             take = pa.array(doc_idx[s0:s1], type=pa.int64())
             arrays, names = [], []
             for c in id_cols:
@@ -291,18 +261,10 @@ def window_stats(
                 pa.array(ends[s0:s1], pa.int64()),
             ]
             names += ["w_start", "w_end"]
-            for name, _ in emit_fields:
-                key = _STAT_KEY.get(name, name)
-                vals = st[key]
-                if name.startswith("cnt_") or name == "win_len":
-                    arrays.append(pa.array(np.asarray(vals, dtype=np.int64)))
-                else:
-                    # from_pandas=True: NaN -> NULL, matching the
-                    # oracles' nullif() convention
-                    arrays.append(
-                        pa.array(np.asarray(vals, dtype=np.float64), from_pandas=True)
-                    )
-                names.append(name)
+            # int64 counts and float64 stats; from_pandas=True: NaN -> NULL,
+            # matching the oracles' nullif() convention
+            arrays += [pa.array(vals, from_pandas=True) for vals in st.values()]
+            names += list(st)
             if with_ctw:
                 # window bytes straight from the batch's text buffer
                 base = row_offsets[doc_idx[s0:s1]]

@@ -767,176 +767,158 @@ def batch_window_stats_concat_sliding(buf, lengths, window, step, ks=KMER_KS):
 
 _FOLD_PAIRS = [(ord(c), ord(c) - 32) for c in "acgtn"]  # lower -> upper
 
-# v * log2(v) for integer counts (entropy via one gather instead of per-cell
-# float division); covers window sizes up to 64k — larger counts fall through
-# to the general paths in _entropy_rows
+# v * log2(v) for integer counts up to 65536 (windows up to 64 KiB): the
+# entropy reducer gathers from it instead of taking per-cell logs
 _VLOGV = np.zeros(65537)
 _VLOGV[1:] = np.arange(1, 65537, dtype=np.float64) * np.log2(
     np.arange(1, 65537, dtype=np.float64)
 )
 
 
-def _entropy_rows(count_matrix: np.ndarray) -> np.ndarray:
-    """Row-wise Shannon entropy (log2) of count matrices; zero rows -> 0.0.
-
-    Sparse-aware: touches only nonzero cells (per-window histograms are
-    mostly zeros — e.g. <=10 of 256 byte bins on ACGTN text), so cost is
-    O(nnz) not O(rows*bins)."""
-    m = np.asarray(count_matrix)
-    nrows = m.shape[0]
-    if nrows == 0:
-        return np.zeros(0)
-    totals = m.sum(axis=1).astype(np.float64)
-    if np.issubdtype(m.dtype, np.integer):
-        # H = log2(T) - (sum v*log2 v)/T with v*log2(v) from a lookup table:
-        # one gather + one row-sum, no per-cell float division
-        mx = int(m.max(initial=0))
-        if mx < len(_VLOGV):
-            s = _VLOGV[m].sum(axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                h = np.where(totals > 0, np.log2(np.maximum(totals, 1.0)) - s / np.maximum(totals, 1.0), 0.0)
-            # entropy >= 0; the table form leaves ~1e-16 negative residue on
-            # single-symbol windows, which would print as "-0.000"
-            return np.maximum(h, 0.0)
-    nnz = np.count_nonzero(m)
-    if nnz == 0:
-        return np.zeros(nrows)
-    if nnz * 3 > m.size:  # dense matrix: stay vectorized, skip indexing
-        q = m / np.maximum(totals, 1.0)[:, None]
-        logs = np.log2(q, out=np.zeros_like(q), where=(m > 0))
-        return -(q * logs).sum(axis=1) + 0.0
-    rows, cols = np.nonzero(m)
-    p = m[rows, cols].astype(np.float64) / totals[rows]
-    contrib = p * np.log2(p)
-    return -np.bincount(rows, weights=contrib, minlength=nrows) + 0.0
+def _entropy_rows(counts: np.ndarray) -> np.ndarray:
+    """Row-wise Shannon entropy (log2) of an integer count matrix; zero rows
+    -> 0.0. One formula, H = log2(T) - (sum v*log2 v)/T: v*log2(v) is one
+    gather from _VLOGV when every count fits the table and is computed
+    otherwise; one row-sum, no per-cell division."""
+    m = np.asarray(counts)
+    if m.max(initial=0) < len(_VLOGV):
+        vlogv = _VLOGV[m]
+    else:
+        v = m.astype(np.float64)
+        vlogv = v * np.log2(v, out=np.zeros_like(v), where=v > 0)
+    totals = np.maximum(m.sum(axis=1), 1).astype(np.float64)
+    # entropy >= 0; the formula leaves ~1e-16 negative residue on
+    # single-symbol windows, which would print as "-0.000"
+    return np.maximum(np.log2(totals) - vlogv.sum(axis=1) / totals, 0.0)
 
 
-# stats_table keys, in emission order; the count keys come from hist_counts
+# The per-window statistics, in window_stats' column order: the struct of
+# seq_statsu8.rs:107-121 plus the entropy-mode and k-mer scalars. Counts
+# are histogram column sums; everything else is a float.
 STATS_TABLE_KEYS = (
-    "len", "a", "c", "g", "t", "n", "masked_counts",
-    "gc_prop", "gc_skew", "at_skew",
+    "win_len", "cnt_a", "cnt_c", "cnt_g", "cnt_t", "cnt_n",
+    "gc_prop", "gc_skew", "at_skew", "shannon_entropy", "entropy6",
     "prop_g", "prop_c", "prop_a", "prop_t", "prop_n", "prop_masked",
-    "shannon_entropy", "entropy6",
-    "dinuc_shannon", "trinuc_shannon", "tetranuc_shannon", "cpg_prop",
-    "kt0",
+    "cpg_prop", "dinuc_shannon", "trinuc_shannon", "tetranuc_shannon", "kt0",
 )
-COUNT_KEYS = frozenset({"len", "a", "c", "g", "t", "n", "masked_counts"})
-# proportions/skews over the counts (cpg_prop also divides by "len")
-_RATIO_KEYS = frozenset({
-    "gc_prop", "gc_skew", "at_skew", "cpg_prop",
-    "prop_g", "prop_c", "prop_a", "prop_t", "prop_n", "prop_masked",
-})
+COUNT_KEYS = frozenset({"win_len", "cnt_a", "cnt_c", "cnt_g", "cnt_t", "cnt_n"})
+# the count each proportion divides by the window length
+_PROP_OF = {
+    "prop_g": "cnt_g", "prop_c": "cnt_c", "prop_a": "cnt_a", "prop_t": "cnt_t",
+    "prop_n": "cnt_n", "prop_masked": "masked_counts",
+}
 # the k-mer order each k-mer statistic reads (kmeru8.rs:113-123, fw.rs:120)
 KMER_STAT_K = {"dinuc_shannon": 2, "cpg_prop": 2, "trinuc_shannon": 3, "tetranuc_shannon": 4}
 
 
 def hist_counts(hists: np.ndarray, masked: bool, keys) -> dict:
     """Count columns for N windows from their (N,256) byte histograms:
-    "len" (every byte), "masked_counts", or a lowercase letter for that
-    base's count. The one place case folds (seq_statsu8.rs:50-85): masked
-    counts only the uppercase byte and nothing as masked; unmasked adds
-    the lowercase byte and counts lowercase IUPAC bases as masked."""
+    "win_len" (every byte), "masked_counts", or "cnt_" and a lowercase
+    letter for that base's count (a c g t n, and w s for gc_prop). The one
+    place case folds (seq_statsu8.rs:50-85): masked counts only the
+    uppercase byte and nothing as masked; unmasked adds the lowercase byte
+    and counts lowercase IUPAC bases as masked. :func:`stats_table` reads
+    its counts through here."""
     h = np.asarray(hists, dtype=np.int64)
     out = {}
     for key in keys:
-        if key == "len":
+        if key == "win_len":
             out[key] = h.sum(axis=1)
         elif key == "masked_counts":
             out[key] = (
                 np.zeros(len(h), dtype=np.int64) if masked else h[:, _MASKED_BYTES].sum(axis=1)
             )
         elif masked:
-            out[key] = h[:, ord(key.upper())]
+            out[key] = h[:, ord(key[4:].upper())]
         else:
-            out[key] = h[:, ord(key.upper())] + h[:, ord(key)]
+            out[key] = h[:, ord(key[4:].upper())] + h[:, ord(key[4:])]
     return out
 
 
 def stats_table(
     hists: np.ndarray, kvecs: dict, masked: bool = False, f32: bool = True, keys=None
 ) -> dict:
-    """Vectorized-across-windows finisher: scalar statistics for N windows
-    at once from the (N,256) byte-histogram matrix and (N,4^k) k-mer matrices.
+    """Vectorized-across-windows finisher: the per-window statistics of N
+    windows at once from their (N,256) byte-histogram matrix and (N,4^k)
+    k-mer matrices.
 
-    ``keys`` (default all of STATS_TABLE_KEYS) picks what is computed;
+    ``keys`` (default all of STATS_TABLE_KEYS) is exactly what is computed;
+    the result holds them in STATS_TABLE_KEYS order. A count comes straight
+    from the histograms (:func:`hist_counts`, int64); a ratio or entropy
+    (float64) is computed only when asked for, from the counts it reads.
     `kvecs` need only hold the orders those keys read (KMER_STAT_K).
     ``f32=True`` reproduces the reference's f32 division semantics
     (seq_statsu8.rs:108-120, 0/0 -> NaN); f32=False computes in float64 for
-    oracle-comparison paths. Returns dict of 1-D arrays keyed like
-    scalar_stats_from_vectors.
+    oracle-comparison paths.
     """
     want = set(STATS_TABLE_KEYS if keys is None else keys)
     unknown = want - set(STATS_TABLE_KEYS)
     if unknown:
         raise ValueError(f"unknown stats_table keys: {sorted(unknown)}")
     h = np.asarray(hists, dtype=np.int64)
-    n = h.shape[0]
     ftype = np.float32 if f32 else np.float64
+    counts = {}
+
+    def cnt(key):  # each count column is summed once, on first use
+        if key not in counts:
+            counts.update(hist_counts(h, masked, (key,)))
+        return counts[key]
+
+    def div(num, den):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return (num.astype(ftype) / den.astype(ftype)).astype(np.float64)
+
     out = {}
-
-    if want & (COUNT_KEYS | _RATIO_KEYS):
-        # counts and the proportions/skews over them
-        out = hist_counts(h, masked, ("len", "a", "c", "g", "t", "n", "w", "s", "masked_counts"))
-        lens, g, cc, a, t = out["len"], out["g"], out["c"], out["a"], out["t"]
-        s, w, masked_counts = out.pop("s"), out.pop("w"), out["masked_counts"]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            def div(num, den):
-                return (num.astype(ftype) / den.astype(ftype)).astype(np.float64)
-
-            out.update({
-                "gc_prop": div(g + cc + s, g + cc + s + a + t + w),
-                "gc_skew": div(g - cc, g + cc),
-                "at_skew": div(a - t, a + t),
-                "prop_g": div(g, lens),
-                "prop_c": div(cc, lens),
-                "prop_a": div(a, lens),
-                "prop_t": div(t, lens),
-                "prop_n": div(out["n"], lens),
-                "prop_masked": div(masked_counts, lens),
-            })
-            if "cpg_prop" in want:
-                out["cpg_prop"] = div(np.asarray(kvecs[2])[:, 6], lens)
-
-    if "shannon_entropy" in want:
-        # 256-bin entropy with acgtn folded up (seq_statsu8.rs:90-106):
-        # fold = 5 column adds on a copy, then the hybrid entropy reducer
-        folded = h.copy()
-        for lo, up in _FOLD_PAIRS:
-            folded[:, up] += folded[:, lo]
-            folded[:, lo] = 0
-        out["shannon_entropy"] = _entropy_rows(folded)
-
-    if "entropy6" in want:
-        # 6-bin entropy (entropy mode, entropy.rs:49-74): fold 256 bins into
-        # 6 via per-class column-slice sums (one pass over h, no ufunc.at)
-        six = np.zeros((n, 6), dtype=np.int64)
-        if masked:
-            for i, b in enumerate(b"ACGTN"):
-                six[:, i] = h[:, b]
+    for key in (k for k in STATS_TABLE_KEYS if k in want):
+        if key in COUNT_KEYS:
+            out[key] = cnt(key)
+        elif key in _PROP_OF:
+            out[key] = div(cnt(_PROP_OF[key]), cnt("win_len"))
+        elif key == "gc_prop":
+            gcs = cnt("cnt_g") + cnt("cnt_c") + cnt("cnt_s")
+            out[key] = div(gcs, gcs + cnt("cnt_a") + cnt("cnt_t") + cnt("cnt_w"))
+        elif key == "gc_skew":
+            out[key] = div(cnt("cnt_g") - cnt("cnt_c"), cnt("cnt_g") + cnt("cnt_c"))
+        elif key == "at_skew":
+            out[key] = div(cnt("cnt_a") - cnt("cnt_t"), cnt("cnt_a") + cnt("cnt_t"))
+        elif key == "cpg_prop":
+            out[key] = div(np.asarray(kvecs[2])[:, 6], cnt("win_len"))
+        elif key == "shannon_entropy":
+            # 256-bin entropy with acgtn folded up (seq_statsu8.rs:90-106):
+            # 5 column adds on a copy
+            folded = h.copy()
+            for lo, up in _FOLD_PAIRS:
+                folded[:, up] += folded[:, lo]
+                folded[:, lo] = 0
+            out[key] = _entropy_rows(folded)
+        elif key == "entropy6":
+            # 6-bin entropy (entropy mode, entropy.rs:49-74): fold 256 bins
+            # into 6 via per-class column-slice sums
+            six = np.zeros((len(h), 6), dtype=np.int64)
+            if masked:
+                for i, b in enumerate(b"ACGTN"):
+                    six[:, i] = h[:, b]
+            else:
+                for cls in range(6):
+                    six[:, cls] = h[:, np.flatnonzero(SIX_BIN == cls)].sum(axis=1)
+            out[key] = _entropy_rows(six)
+        elif key in KMER_STAT_K:
+            # k-mer diversities (kmeru8.rs:113-123)
+            out[key] = _entropy_rows(kvecs[KMER_STAT_K[key]])
         else:
-            for cls in range(6):
-                cols_cls = np.flatnonzero(SIX_BIN == cls)
-                six[:, cls] = h[:, cols_cls].sum(axis=1)
-        out["entropy6"] = _entropy_rows(six)
-
-    # k-mer diversities (kmeru8.rs:113-123)
-    for name in ("dinuc_shannon", "trinuc_shannon", "tetranuc_shannon"):
-        if name in want:
-            out[name] = _entropy_rows(kvecs[KMER_STAT_K[name]])
-
-    if "kt0" in want:
-        # KT0 closed form via an lgamma lookup table over 0..max_len (A11).
-        # KT0/CTW always case-fold regardless of the masked flag
-        # (kmeru8.rs:128-137 nuc_to_sym accepts upper and lower).
-        acgt = np.stack(list(hist_counts(h, False, "acgt").values()), axis=1)
-        n_eff = acgt.sum(axis=1)
-        max_n = int(n_eff.max()) if n else 0
-        lg_half = np.array([math.lgamma(i + 0.5) for i in range(max_n + 1)])
-        lg_int = np.array([math.lgamma(i + 2.0) for i in range(max_n + 1)])
-        log_p = lg_half[acgt].sum(axis=1) - 4 * _LGAMMA_HALF + _LGAMMA_TWO - lg_int[n_eff]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out["kt0"] = np.where(n_eff > 0, -(log_p / _LN2) / np.maximum(n_eff, 1), 0.0)
-    return {k: out[k] for k in STATS_TABLE_KEYS if k in want}
+            # kt0: the KT0 closed form via an lgamma lookup table over
+            # 0..max_len (A11). KT0/CTW always case-fold regardless of the
+            # masked flag (kmeru8.rs:128-137 nuc_to_sym accepts upper and
+            # lower).
+            acgt = np.stack([h[:, b] + h[:, b + 32] for b in b"ACGT"], axis=1)
+            n_eff = acgt.sum(axis=1)
+            max_n = int(n_eff.max(initial=0))
+            lg_half = np.array([math.lgamma(i + 0.5) for i in range(max_n + 1)])
+            lg_int = np.array([math.lgamma(i + 2.0) for i in range(max_n + 1)])
+            log_p = lg_half[acgt].sum(axis=1) - 4 * _LGAMMA_HALF + _LGAMMA_TWO - lg_int[n_eff]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                out[key] = np.where(n_eff > 0, -(log_p / _LN2) / np.maximum(n_eff, 1), 0.0)
+    return out
 
 
 def page_window_stats(text, window: int, step: int | None = None, masked: bool = False):

@@ -11,11 +11,10 @@ sliding, salted, session, the north-star join) shares that one map side
 in the reference (seq_statsu8.rs), and a page with empty text counts
 nowhere.
 
-Sinks: the production target is an Iceberg table (exactly-once via
-idempotent epoch commits); this sandbox has no Iceberg runtime jar, so the
-tested sink is Spark's file sink (parquet + _spark_metadata transaction
-log — the same exactly-once contract: batch commits are atomic and replay
-is idempotent). ``sink_format()`` picks iceberg when available.
+Sink: Spark's parquet file sink (``write_exactly_once``) with its
+_spark_metadata transaction log — batch commits are atomic and replay is
+idempotent, the exactly-once contract an Iceberg table would also give.
+The pyspark distribution ships no Iceberg runtime, so none is wired in.
 """
 
 from __future__ import annotations
@@ -601,29 +600,16 @@ def write_topn_hosts_per_window(
     return w.start()
 
 
-def sink_format(spark: SparkSession) -> str:
-    """Iceberg when the runtime is on the classpath, else the parquet file
-    sink (same exactly-once commit contract in this sandbox)."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.source.SparkTable"
-        )
-        return "iceberg"
-    except Exception:
-        return "parquet"
-
-
 def write_exactly_once(
     df: DataFrame,
     out_path: str,
     checkpoint: str,
-    fmt: str = "parquet",
     once: bool = True,
 ):
-    """Exactly-once append sink with checkpointing; resumable (same
+    """Exactly-once parquet append sink with checkpointing; resumable (same
     checkpoint dir -> no dupes on restart)."""
     w = (
-        df.writeStream.format(fmt)
+        df.writeStream.format("parquet")
         .outputMode("append")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)

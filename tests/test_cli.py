@@ -276,3 +276,40 @@ def test_cli_streaming_refuses_ignored_flags(tmp_path, capsys, flags):
     assert rc == 2
     assert flags[0] in capsys.readouterr().err
     assert not out_dir.exists()
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [["-w", "0"], ["-w", "-3"], ["-s", "0"], ["-s", "-1"], ["-w", "0", "--streaming"]],
+    ids=["w0", "w_neg", "s0", "s_neg", "streaming_w0"],
+)
+def test_cli_refuses_nonpositive_window_or_step(tmp_path, capsys, flags):
+    """-w or -s below 1 exits 2 before Spark starts, instead of header-only
+    TSVs (-w 0), an empty sink (--streaming -w 0) or a Python-worker crash
+    (-s 0, negative values)."""
+    from fasta_windows_spark import cli
+
+    src = str(tmp_path / "pages")
+    P.write_pages_parquet(P.gen_pages(n_pages=20, n_hosts=2, seed=1), src, n_files=1)
+    out_dir = tmp_path / "fw_out"
+    rc = cli.main(["-f", src, "-o", "t", *flags, "--out-dir", str(out_dir)])
+    assert rc == 2
+    assert flags[0] in capsys.readouterr().err
+    assert not out_dir.exists()
+
+
+def test_cli_streaming_empty_input_dir(tmp_path, spark):
+    """--streaming reads its input only as a stream, whose schema is
+    explicit: an input directory with no files yet finishes with exit 0
+    and a committed sink that holds no rows (a batch read of the same
+    directory cannot infer a schema)."""
+    from fasta_windows_spark import cli
+
+    src = tmp_path / "pages"
+    src.mkdir()
+    out_dir = tmp_path / "fw_out"
+    rc = cli.main(["-f", str(src), "-o", "e", "--streaming", "--out-dir", str(out_dir)])
+    assert rc == 0
+    sink = out_dir / "e_host_windows"
+    assert (sink / "_spark_metadata").is_dir()
+    assert not list(sink.rglob("*.parquet"))

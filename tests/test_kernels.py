@@ -413,3 +413,61 @@ def test_dinuc_oe_hand_computed(spark):
         .collect()[0].oe_fp
     )
     assert got == exp == 2_500_000
+
+
+@pytest.mark.parametrize(
+    "window,step", [(0, None), (-5, None), (10, 0), (10, -1)],
+    ids=["w0", "w_neg", "s0", "s_neg"],
+)
+def test_window_stats_refuses_nonpositive_window_or_step(spark, window, step):
+    """A window or step below 1 byte is a loud ValueError when the plan is
+    built, not an empty frame (window=0) or a crash inside a Python worker
+    (step=0: ZeroDivisionError; negative: numpy's negative repeats)."""
+    from fasta_windows_spark.functions.udfs import window_stats
+
+    df = spark.createDataFrame([(1, "ACGT")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="window and step"):
+        window_stats(df, window=window, step=step)
+
+
+@pytest.mark.parametrize("step", [None, 30_000], ids=["tumbling", "sliding"])
+def test_window_stats_entropy_past_the_vlogv_table(spark, step):
+    """Windows of 80,000 bytes hold counts above 65,536, past the
+    v*log2(v) table: window_stats' entropy columns still equal the scalar
+    reference (entropy256, entropy6, shannon_diversity of kmer_vector)
+    within 1e-12, on a homopolymer-heavy page (its first window all A) and
+    on a mixed-case page."""
+    from fasta_windows_spark.functions.udfs import window_stats
+
+    W = 80_000
+    rng = np.random.default_rng(80)
+    alpha = np.frombuffer(b"ACGTNacgtWS", dtype=np.uint8)
+    tail = np.where(
+        rng.random(110_000) < 0.97, ord("A"), alpha[rng.integers(0, len(alpha), 110_000)]
+    ).astype(np.uint8)
+    homo = b"A" * 90_000 + tail.tobytes()
+    mixed = alpha[rng.integers(0, len(alpha), 170_000)].tobytes()
+    assert K.kmer_vector(homo[:W], 4).max() > 65_536  # the table's reach
+    pages = {1: homo, 2: mixed}
+    df = spark.createDataFrame(
+        [(i, t.decode()) for i, t in pages.items()], "doc_id long, text string"
+    )
+    cols = ["shannon_entropy", "entropy6", "dinuc_shannon", "trinuc_shannon",
+            "tetranuc_shannon"]
+    got = window_stats(df, window=W, step=step, fields=cols).orderBy(
+        "doc_id", "w_start").collect()
+    want = [
+        (i, s, e) for i, t in pages.items() for s, e in K.window_bounds(len(t), W, step)
+    ]
+    assert [(r.doc_id, r.w_start, r.w_end) for r in got] == want
+    for r, (i, s, e) in zip(got, want):
+        win = pages[i][s:e]
+        ref = {
+            "shannon_entropy": K.entropy256(win),
+            "entropy6": K.entropy6(win),
+            **{name: K.shannon_diversity(K.kmer_vector(win, k))
+               for name, k in (("dinuc_shannon", 2), ("trinuc_shannon", 3),
+                               ("tetranuc_shannon", 4))},
+        }
+        for name, v in ref.items():
+            assert abs(r[name] - v) <= 1e-12, (i, s, name, r[name], v)
